@@ -79,10 +79,10 @@ def run(spark, sf_dir: str, out_root: str) -> dict:
     }
 
     # stage 4: index the archives, write CDXJ
-    from roapi_spark.functions.pipeline14 import _warc_fixture_dir
+    from roapi_spark.functions.fixtures import warc_fixture_dir
     from roapi_spark.sinks.cdx import index_warc, write_cdx
 
-    ptrs = index_warc(spark, _warc_fixture_dir(spark, sf_dir))
+    ptrs = index_warc(spark, warc_fixture_dir(spark, sf_dir))
     manifest = write_cdx(
         ptrs.withColumn(
             "shard", F.pmod(F.crc32(F.col("surt_key")), F.lit(2))

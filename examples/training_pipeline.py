@@ -55,14 +55,15 @@ def _write_snapshot(df: DataFrame, out_dir: str) -> str:
 def stage0_crawl_ingest(spark: SparkSession, sf_dir: str, out_dir: str) -> str:
     """Crawl archives -> documents snapshot: the stage BEFORE everything
     else in a real pretraining pipeline. Scans WARC files (the 8-shard
-    crawl fixture pipeline14 derives from sf_dir — standing in for a
+    crawl fixture functions/fixtures.py derives from sf_dir — standing in for a
     landing directory of real archives), keeps HTTP-200 responses,
     enforces robots.txt + the domain blocklist, extracts main text from
     HTML pages (charset-aware, fail-closed) or takes text/plain payloads
     verbatim, collapses duplicate-URL fetches on the canonical form, and
     writes a documents.parquet-shaped snapshot (doc_id/source parsed
     from the URL, lang re-predicted with the stopword language ID)."""
-    from roapi_spark.functions.pipeline14 import _extract_kernel, _read_warc
+    from roapi_spark.functions.crawl import extract_kernel
+    from roapi_spark.functions.fixtures import read_warc
     from roapi_spark.functions.web import parse_robots
 
     # this crawl's policy: the wildcard group denies everything, our UA
@@ -79,9 +80,9 @@ def stage0_crawl_ingest(spark: SparkSession, sf_dir: str, out_dir: str) -> str:
         url_path,
     )
 
-    resp = _read_warc(spark, sf_dir, types="response")
+    resp = read_warc(spark, sf_dir, types="response")
     pages = resp.mapInPandas(
-        _extract_kernel(schema_needs_text=True),
+        extract_kernel(schema_needs_text=True),
         "target_uri string, is_ok int, is_html int, norm_len bigint, "
         "extracted string",
     )
@@ -159,8 +160,7 @@ def stage0_crawl_ingest(spark: SparkSession, sf_dir: str, out_dir: str) -> str:
 def stage1_quality(spark: SparkSession, sf_dir: str, out_dir: str) -> str:
     """Keep docs passing the linear quality head and not flagged as
     benchmark-contaminated."""
-    from roapi_spark.functions.pipeline3 import text_contamination
-    from roapi_spark.functions.pipeline6 import text_quality_logit
+    from roapi_spark.functions.quality import text_contamination, text_quality_logit
 
     keep_q = text_quality_logit(spark, sf_dir).filter("keep").select("doc_id")
     contaminated = (
@@ -205,7 +205,7 @@ def stage2b_span_rewrite(spark: SparkSession, sf_dir: str, out_dir: str) -> str:
     normalization casing/digits/punctuation must not pay for free);
     untouched docs keep their original bytes, and docs cut to nothing
     are dropped (zero-token docs had nothing to dedup and pass)."""
-    from roapi_spark.functions.pipeline10 import dedup_span_rewrite
+    from roapi_spark.functions.dedup import dedup_span_rewrite
 
     rw = dedup_span_rewrite(spark, sf_dir).filter(
         (F.col("n_kept") > 0) | (F.col("n_tokens") == 0)
@@ -226,7 +226,7 @@ def stage2b_span_rewrite(spark: SparkSession, sf_dir: str, out_dir: str) -> str:
 
 
 def _cross_split_pairs(spark: SparkSession, sf_dir: str) -> int:
-    from roapi_spark.functions.pipeline10 import q_split_leakage
+    from roapi_spark.functions.selection import q_split_leakage
 
     return sum(
         r.n_pairs
@@ -238,15 +238,15 @@ def _cross_split_pairs(spark: SparkSession, sf_dir: str) -> int:
 def stage4_ship(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
     """Shard manifest for the final corpus + the closing leakage audit:
     near-dup pairs crossing the train/val/test boundary AFTER dedup."""
-    from roapi_spark.functions.pipeline10 import q_token_budget_shards
+    from roapi_spark.functions.selection import q_token_budget_shards
 
     n_shards = q_token_budget_shards(spark, sf_dir).count()
     return n_shards, _cross_split_pairs(spark, sf_dir)
 
 
 def stage3_plan_and_pack(spark: SparkSession, sf_dir: str) -> tuple[list, int]:
-    from roapi_spark.functions.pipeline import text_seq_pack
-    from roapi_spark.functions.pipeline6 import q_mixture_allocation
+    from roapi_spark.functions.selection import q_mixture_allocation
+    from roapi_spark.functions.tokenizers import text_seq_pack
 
     alloc = [r.asDict() for r in q_mixture_allocation(spark, sf_dir).collect()]
     packed = text_seq_pack(spark, sf_dir)
@@ -299,10 +299,8 @@ def stage5_tokenizer_audit(spark: SparkSession, sf_dir: str):
     quality rule into the fixed-point LR head (the classifier a serving
     tier would run on future crawl batches). Both are build-once
     artifacts keyed to this snapshot."""
-    from roapi_spark.functions.pipeline12 import (
-        lr_train_state,
-        text_bpe_fertility_served,
-    )
+    from roapi_spark.functions.quality import lr_train_state
+    from roapi_spark.functions.tokenizers import text_bpe_fertility_served
 
     fert = {
         r.source: float(r.fertility)

@@ -16,8 +16,11 @@ Architecture (Spark-first, not a port):
 - ``encoders``  — response encoders json/csv/parquet/arrow + content
                   negotiation (reference: columnq/src/encoding/*).
 - ``server``    — HTTP API layer (reference: roapi/src/api/*).
-- ``functions`` — LLM-data-pipeline operators beyond the reference surface:
-                  dedup, similarity search, text analysis, multimodal.
+- ``functions`` — LLM-data-pipeline operators beyond the reference surface,
+                  one module per domain: text (shared reader and
+                  tokenizers), quality, tokenizers, dedup, selection,
+                  similarity, crawl, formats (source/encoder/Delta gates),
+                  fixtures, multimodal.
 
 Everything executes through Spark SQL / Catalyst; the only Python-side work
 is API translation and driver-side encoding.

@@ -64,6 +64,9 @@ class Catalog:
         self._pinned: dict[str, list[DataFrame]] = {}
         # staged point-in-time file copies backing those generations
         self._staged: dict[str, list[str]] = {}
+        # monotonic time each table's view was last (re-)bound: the
+        # refresh loop counts reload_interval from here
+        self._bound_at: dict[str, float] = {}
 
     # -- tables ------------------------------------------------------------
 
@@ -138,6 +141,7 @@ class Catalog:
             if len(gens) > 2:
                 gens.pop(0).unpersist(blocking=False)
         df.createOrReplaceTempView(ts.name)
+        self._bound_at[ts.name] = time.monotonic()
         return df
 
     def load_table(self, ts: TableSource, dynamic: bool = False) -> None:
@@ -189,6 +193,7 @@ class Catalog:
             # set: the next read's flush would KeyError on sources[name]
             self._stale_dml_views.discard(name)
             self._bound_delta_head.pop(name, None)
+            self._bound_at.pop(name, None)
             for df in self._pinned.pop(name, []):
                 df.unpersist(blocking=False)
             for staged in self._staged.pop(name, []):
@@ -1166,7 +1171,13 @@ class Catalog:
 
     # -- refresh -----------------------------------------------------------
 
-    def refresh_table(self, name: str) -> None:
+    def refresh_table(self, name: str, dynamic: bool = False) -> None:
+        """Reload + re-bind a registered table. ``dynamic=True`` marks an
+        API-initiated refresh, rejected in read-only mode like a dynamic
+        register (roapi/src/api/routes.rs:29-37); the background refresh
+        loop calls with the default."""
+        if dynamic and self.read_only:
+            raise ReadOnlyError("catalog is read-only; dynamic refresh disabled")
         ts = self.sources.get(name)
         if ts is None:
             raise CatalogError(f"table not found: {name}")
@@ -1201,7 +1212,13 @@ class Catalog:
                     if ts.reload_interval is None:
                         continue
                     now = time.monotonic()
-                    if now - last.get(name, 0.0) >= ts.reload_interval:
+                    # the interval runs from the later of the last bind
+                    # (load, refresh) and the last attempt, so a table
+                    # just loaded is not reloaded on the first poll
+                    since = max(
+                        self._bound_at.get(name, now), last.get(name, 0.0)
+                    )
+                    if now - since >= ts.reload_interval:
                         try:
                             self.refresh_table(name)
                         except Exception:  # noqa: BLE001 — keep serving stale

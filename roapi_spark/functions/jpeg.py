@@ -37,7 +37,6 @@ ZIGZAG = np.array(
     ],
     dtype=np.int64,
 )
-UNZIGZAG = np.argsort(ZIGZAG)
 
 # Standard Huffman tables from ITU T.81 Annex K (public spec constants):
 # (bits[1..16] code counts, symbol values)

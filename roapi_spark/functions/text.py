@@ -1,6 +1,13 @@
-"""Text-analysis operators for LLM-data pipelines (beyond the reference
-surface, per BASELINE.json north star): token counting, quality scoring,
-language scoring, document fingerprinting.
+"""The shared corpus reader and tokenizers, and the basic text operators.
+
+Every corpus query reads ``documents`` through ``docs()`` and tokenizes
+through one Spark/DuckDB pair per decision: ``tokens_col()`` /
+``TOKENS_DUCK`` (lowercase ``[a-z]+`` runs) and ``words_col()`` /
+``WORDS_DUCK`` (whitespace-separated words). Oracles interpolate the
+DuckDB half, so the two engines cannot drift apart.
+
+Operators here: token counting, quality scoring, language scoring,
+document fingerprinting.
 
 All hot-path logic is JVM-side (built-in functions + higher-order array
 functions) — no Python UDFs — so it whole-stage-codegens and scales
@@ -18,20 +25,34 @@ from pyspark.sql import functions as F
 from roapi_spark.plans.registry import register
 from roapi_spark.util import WS_CLASS, pround
 
+
 STOPWORDS_EN = ["the", "a", "and", "of", "to", "in", "is", "it"]
 # shared token pipeline: lowercase, split on non-letters, drop empties
-_TOKENS_SQL_DUCK = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> length(x) > 0)"
+TOKENS_DUCK = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> length(x) > 0)"
 
 
 def docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus table every text, dedup and selection query reads."""
     return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
 
 def tokens_col() -> Column:
-    """Non-empty lowercase word tokens, computed JVM-side."""
+    """Non-empty lowercase word tokens, computed JVM-side (the Spark twin
+    of ``TOKENS_DUCK``)."""
     return F.filter(
         F.split(F.lower(F.col("text")), "[^a-z]+"), lambda x: F.length(x) > 0
     )
+
+
+# whitespace word tokens (documents are lowercase word-soup; keep raw case
+# handling anyway so the op is corpus-agnostic)
+WORDS_DUCK = "list_filter(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+'), x -> length(x) > 0)"
+
+
+def words_col() -> Column:
+    """Non-empty whitespace-separated words (the Spark twin of
+    ``WORDS_DUCK``)."""
+    return F.filter(F.split(F.col("text"), WS_CLASS + "+"), lambda x: F.length(x) > 0)
 
 
 def stopword_hits(toks: Column, words: list[str]) -> Column:
@@ -43,7 +64,7 @@ def stopword_hits(toks: Column, words: list[str]) -> Column:
     "text_stats",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, n_chars, text, {_TOKENS_SQL_DUCK} AS w FROM documents
+      SELECT doc_id, n_chars, text, {TOKENS_DUCK} AS w FROM documents
     )
     SELECT doc_id,
            CAST(LENGTH(text) AS BIGINT)                      AS len_chars,
@@ -87,7 +108,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_quality",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, text, {_TOKENS_SQL_DUCK} AS w FROM documents
+      SELECT doc_id, text, {TOKENS_DUCK} AS w FROM documents
     ), feats AS (
       SELECT doc_id,
              LEN(w) AS n_tokens,
@@ -139,11 +160,9 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_langid",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, lang,
-             list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> length(x) > 0) AS w
-      FROM documents
+      SELECT doc_id, lang, {TOKENS_DUCK} AS w FROM documents
     ), scores AS (
       SELECT doc_id, lang,
         CAST(LEN(LIST_FILTER(w, x -> LIST_CONTAINS(['the','a','and','of','is'], x))) AS DOUBLE)

@@ -1,55 +1,23 @@
-"""Batch 15: unigram-LM subword tokenizer trainer (SentencePiece-style)
-under the driver oracle.
+"""Subword tokenizers and the token-count audits built on them.
 
-Completes the tokenizer-construction suite next to the BPE trainer
-(pipeline12): the OTHER mainstream subword algorithm. Reference scope:
-roapi has no tokenizer surface (columnq/src/table/mod.rs serves tables
-as-is) — this is training-data-pipeline extension surface implementing
-the public unigram language-model tokenizer (Kudo 2018, "Subword
-Regularization", ACL; the SentencePiece default), in its hard-EM
-(Viterbi-EM) variant:
+* BPE (Sennrich, Haddow & Birch 2016): ``text_bpe_train`` learns the
+  first ``BPE_MERGES`` merges from the word-frequency table,
+  ``text_bpe_fertility`` / ``text_bpe_encode`` apply them, and the
+  ``*_served`` twins read the persisted merge layout.
+* Unigram LM (Kudo 2018, SentencePiece's default) in its hard-EM
+  variant: ``text_unigram_train`` / ``_vocab`` / ``_fertility`` /
+  ``_encode`` / ``_prune``, plus ``text_unigram_em`` for soft EM over
+  the forward-backward lattice. ``text_tokenizer_compare`` re-verifies
+  both trainers' full replays in one oracle.
+* Fertility and packing: ``q_token_fertility`` (word-level pieces per
+  token), ``text_seq_pack`` / ``text_seq_pack_bpe`` (greedy sequence
+  packing per source) and ``q_packing_efficiency``.
 
-* training units are adjacent word-token PAIRS joined by ``_``
-  (``the_quick``, truncated to ``MAX_W`` chars) — the analogue of
-  SentencePiece operating on space-carrying sentence text, so learned
-  pieces can span word boundaries (``e_``, ``_th``);
-* seed vocabulary: every substring of length 1..``MAX_P`` weighted by
-  occurrence, all single characters plus the top-``SEED`` multi-char
-  pieces (count DESC, piece ASC);
-* per EM iteration: piece costs are integer fixed-point negative
-  log-probs, ``floor(SCALE * ln((total + V)/(cnt + 1)) + 0.5)``
-  (add-one smoothing over the fixed seed vocab V); the E-step
-  Viterbi-segments every distinct training unit under those costs and
-  re-counts pieces weighted by unit frequency (hard EM: argmax path,
-  not expected counts — the standard fast variant).
-
-Determinism contract (what makes the DuckDB oracle exact): costs are
-integers; the Viterbi DP minimizes an integer sum, and the backtrace
-resolves cost ties by taking the SMALLEST piece length first at each
-step — both engines implement the identical rule, so the learned
-trajectory is bit-identical. ``ln``/``FLOOR`` agreement between
-Python's libm and DuckDB over the realized count ratios is pinned by
-``tests/test_pipeline15.py::test_ln_fixed_point_agreement``.
-
-Oracle shape: the full training replay is GENERATED SQL — the Viterbi
-DP is unrolled into one materialized CTE per DP position and backtrace
-step (lateral-alias substitution grows the expression tree as 4^L
-otherwise), and piece-cost lookups are a single hash join + pivot per
-iteration (``wl{i}``), never correlated subqueries (a correlated
-lookup re-derives the whole upstream chain per row and does not finish).
-
-Scale shape at 100 TB:
-- the corpus is scanned ONCE to build the pair-unit frequency table
-  (explode + hash agg with map-side partials); it is Heaps-bounded
-  (vocabulary of adjacent-pair spellings, not corpus-sized);
-- every EM iteration is one Arrow-batched ``mapInPandas`` Viterbi pass
-  over that table (embarrassingly parallel, no shuffle) + one
-  vocab-keyed hash agg; the driver holds only vocab-sized state
-  (V = ~150 rows of counts/costs per iteration — same bounded-collect
-  pattern as the BPE argmax and the IVF centroids);
-- scoring (fertility) joins the corpus pair stream to the unit->pieces
-  dimension via size-capped broadcast: one corpus scan, no
-  corpus-sized shuffle.
+Determinism is the oracle contract: costs and counts are integers,
+argmax ties break on (count DESC, string ASC) in both engines, and the
+DuckDB oracles replay every training iteration as an unrolled CTE chain.
+Training state is Heaps'-law bounded (the word vocabulary), never
+corpus-sized, and is memoized per corpus snapshot.
 """
 
 from __future__ import annotations
@@ -58,14 +26,700 @@ import math
 import os
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from roapi_spark.functions.text import _TOKENS_SQL_DUCK, docs, tokens_col
+from roapi_spark.functions.text import (
+    TOKENS_DUCK,
+    WORDS_DUCK,
+    docs,
+    tokens_col,
+    words_col,
+)
 from roapi_spark.plans.registry import register
 from roapi_spark.plans.util import maybe_broadcast
 from roapi_spark.util import pround, pround_sql
+
+
+PACK_TOKENS = 2048
+
+
+@register(
+    "text_seq_pack",
+    oracle=f"""
+    WITH toks AS (
+      SELECT doc_id, source,
+             CAST(LEN({WORDS_DUCK}) AS BIGINT) AS n_tokens
+      FROM documents
+    ), packed AS (
+      SELECT doc_id, source, n_tokens,
+             COALESCE(SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+               AS cum_before
+      FROM toks
+    )
+    SELECT doc_id, source, n_tokens,
+           CAST(FLOOR(cum_before / {PACK_TOKENS}) AS BIGINT) AS pack_id,
+           CAST(cum_before % {PACK_TOKENS} AS BIGINT) AS pack_offset
+    FROM packed
+    """,
+    doc=f"Sequence packing: assign each document a (pack_id, offset) slot "
+    f"in {PACK_TOKENS}-token training sequences via a running token count "
+    "per `source` shard — GPT-style concat-and-chunk packing. The window "
+    "partitions by source, so packs build independently per shard (no "
+    "global sort) and the op scales linearly with shard count.",
+    tags=("text",),
+)
+def text_seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = docs(spark, sf_dir)
+    toks = d.select(
+        "doc_id", "source", F.size(words_col()).cast("bigint").alias("n_tokens")
+    )
+    w = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    packed = toks.select(
+        "doc_id",
+        "source",
+        "n_tokens",
+        F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).alias("cum_before"),
+    )
+    return packed.select(
+        "doc_id",
+        "source",
+        "n_tokens",
+        F.floor(F.col("cum_before") / PACK_TOKENS).cast("bigint").alias("pack_id"),
+        (F.col("cum_before") % PACK_TOKENS).cast("bigint").alias("pack_offset"),
+    )
+
+
+# -- tokenizer fertility by language ----------------------------------------
+
+
+@register(
+    "q_token_fertility",
+    oracle=f"""
+    WITH t AS (
+      SELECT lang, LENGTH(text) AS n_bytes, len({TOKENS_DUCK}) AS n_toks
+      FROM documents
+    )
+    SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(n_toks) AS BIGINT) AS n_tokens,
+           CASE WHEN SUM(n_toks) > 0
+                THEN FLOOR(SUM(n_bytes) / CAST(SUM(n_toks) AS DOUBLE)
+                           * 10000 + 0.5) / 10000.0
+                ELSE 0.0 END AS bytes_per_token,
+           FLOOR(SUM(n_toks) / CAST(COUNT(*) AS DOUBLE) * 10000 + 0.5)
+             / 10000.0 AS tokens_per_doc
+    FROM t GROUP BY lang
+    """,
+    doc="Tokenizer-fertility audit: bytes/token and tokens/doc per "
+    "language tag — the compression-rate table that decides vocabulary "
+    "allocation and flags languages a tokenizer serves badly. Integer "
+    "sums with map-side combine; ratios pround-ed once at the end (exact "
+    "cross-engine).",
+    tags=("text", "audit"),
+)
+def q_token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
+    t = docs(spark, sf_dir).select(
+        "lang",
+        F.length("text").alias("n_bytes"),
+        F.size(tokens_col()).alias("n_toks"),
+    )
+    return t.groupBy("lang").agg(
+        F.count("*").cast("bigint").alias("n_docs"),
+        F.sum("n_toks").cast("bigint").alias("n_tokens"),
+        F.when(
+            F.sum("n_toks") > 0,
+            pround(F.sum("n_bytes") / F.sum("n_toks").cast("double")),
+        )
+        .otherwise(0.0)
+        .alias("bytes_per_token"),
+        pround(F.sum("n_toks") / F.count("*").cast("double")).alias(
+            "tokens_per_doc"
+        ),
+    )
+
+
+# -- packing efficiency audit -----------------------------------------------
+
+
+def _packing_oracle() -> str:
+    p = PACK_TOKENS
+    return f"""
+    WITH toks AS (
+      SELECT doc_id, source,
+             CAST(LEN({WORDS_DUCK}) AS BIGINT) AS n_tokens
+      FROM documents
+    ), packed AS (
+      SELECT doc_id, source, n_tokens,
+             COALESCE(SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+               AS cum_before
+      FROM toks
+    ), agg AS (
+      SELECT source,
+             CAST(COUNT(*) AS BIGINT) AS n_docs,
+             CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
+             CAST(FLOOR((SUM(n_tokens) + {p} - 1) / {p}) AS BIGINT) AS n_packs,
+             CAST(SUM(CASE WHEN (cum_before % {p}) + n_tokens > {p}
+                      THEN 1 ELSE 0 END) AS BIGINT) AS n_straddlers
+      FROM packed GROUP BY source
+    )
+    SELECT source, n_docs, n_tokens, n_packs, n_straddlers,
+           FLOOR(n_straddlers / CAST(n_docs AS DOUBLE) * 10000 + 0.5)
+             / 10000.0 AS straddle_frac,
+           CASE WHEN n_packs > 0
+                THEN FLOOR((n_tokens - (n_packs - 1) * {p})
+                           / CAST({p} AS DOUBLE) * 10000 + 0.5) / 10000.0
+                ELSE 0.0 END AS last_pack_fill
+    FROM agg
+    """
+
+
+@register(
+    "q_packing_efficiency",
+    oracle=_packing_oracle(),
+    doc="Packing-efficiency audit over text_seq_pack's concat-and-chunk "
+    "layout: per source shard — pack count, document-straddle fraction "
+    "(docs split across a pack boundary, the cost GPT-style packing "
+    "pays vs doc-aware bin packing), and the final pack's fill rate "
+    "(every other pack is exactly full by construction). Same per-shard "
+    "running-sum window as the pack op; the audit itself is one tiny "
+    "per-source aggregate, all integer-exact.",
+    tags=("text", "pipeline", "audit"),
+)
+def q_packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window
+
+
+    p = PACK_TOKENS
+    toks = docs(spark, sf_dir).select(
+        "doc_id", "source", F.size(words_col()).cast("bigint").alias("n_tokens")
+    )
+    w = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    packed = toks.withColumn(
+        "cum_before", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
+    )
+    agg = packed.groupBy("source").agg(
+        F.count("*").cast("bigint").alias("n_docs"),
+        F.sum("n_tokens").cast("bigint").alias("n_tokens"),
+        F.floor((F.sum("n_tokens") + p - 1) / p).cast("bigint").alias("n_packs"),
+        F.sum(
+            F.when((F.col("cum_before") % p) + F.col("n_tokens") > p, 1).otherwise(0)
+        )
+        .cast("bigint")
+        .alias("n_straddlers"),
+    )
+    return agg.select(
+        "source",
+        "n_docs",
+        "n_tokens",
+        "n_packs",
+        "n_straddlers",
+        pround(F.col("n_straddlers") / F.col("n_docs").cast("double")).alias(
+            "straddle_frac"
+        ),
+        F.when(
+            F.col("n_packs") > 0,
+            pround(
+                (F.col("n_tokens") - (F.col("n_packs") - 1) * p)
+                / F.lit(float(p))
+            ),
+        )
+        .otherwise(0.0)
+        .alias("last_pack_fill"),
+    )
+
+
+BPE_MERGES = 8  # unrolled in the DuckDB oracle; keep the two in lockstep
+EOW = "#"  # end-of-word marker symbol (tokens are [a-z] only)
+
+# split a wrapped symbol string back into its symbol list (both engines)
+_SYMS_SPARK = "filter(split(s, ','), x -> x != '')"
+_SYMS_DUCK = "list_filter(string_split(s, ','), x -> x <> '')"
+
+# adjacent pairs of a symbol list l, as 'left|right' strings
+_BPE_PAIRS_SPARK = (
+    "transform(slice(l, 1, size(l)-1), (x, i) -> concat(x, '|', element_at(l, i+2)))"
+)
+_BPE_PAIRS_DUCK = "list_transform(range(1, len(l)), j -> l[j] || '|' || l[j+1])"
+
+# process-local memo: training is iterative (one tiny driver collect per
+# merge), so queries sharing a corpus reuse the learned merge sequence
+_BPE_MEMO: dict[tuple, tuple[list[tuple], DataFrame]] = {}
+
+
+def _wrapped_init_col() -> F.Column:
+    """word token -> wrapped initial symbol string: chars + EOW marker,
+    each symbol wrapped in its own ',' pair ('the' -> ',t,,h,,e,,#,')."""
+    chars = F.expr("filter(split(tok, ''), x -> x != '')")
+    arr = F.concat(chars, F.array(F.lit(EOW)))
+    return F.concat(F.lit(","), F.array_join(arr, ",,"), F.lit(","))
+
+
+def bpe_train_state(
+    spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES
+) -> tuple[list[tuple], DataFrame]:
+    """Learn ``n_merges`` BPE merges; return (merge rows, final vocab DF).
+
+    Merge rows are ``(rank, lft, rgt, merged, pair_count)``; the vocab
+    DataFrame carries ``(tok, s, c)`` with ``s`` the post-merge wrapped
+    symbol string — the input to piece counting / tokenization.
+    """
+    path = os.path.join(sf_dir, "documents.parquet")
+    key = (
+        spark.sparkContext.applicationId,
+        os.path.realpath(path),
+        os.path.getmtime(path),
+        n_merges,
+    )
+    hit = _BPE_MEMO.get(key)
+    if hit is not None:
+        return hit
+
+    wc = (
+        docs(spark, sf_dir)
+        .select(F.explode(tokens_col()).alias("tok"))
+        .groupBy("tok")
+        .agg(F.count("*").cast("bigint").alias("c"))
+    )
+    vocab = wc.withColumn("s", _wrapped_init_col()).select("tok", "s", "c").cache()
+
+    merges: list[tuple] = []
+    cur = vocab
+    for r in range(n_merges):
+        top = (
+            cur.select(F.expr(_SYMS_SPARK).alias("l"), "c")
+            .select(F.explode(F.expr(_BPE_PAIRS_SPARK)).alias("pr"), "c")
+            .groupBy("pr")
+            .agg(F.sum("c").alias("cnt"))
+            .orderBy(F.col("cnt").desc(), F.col("pr").asc())
+            .limit(1)
+            .collect()
+        )
+        if not top:  # degenerate corpus: nothing left to merge
+            break
+        pr, cnt = top[0]["pr"], int(top[0]["cnt"])
+        lft, rgt = pr.split("|", 1)
+        merged = lft + rgt
+        merges.append((r + 1, lft, rgt, merged, cnt))
+        cur = cur.withColumn(
+            "s",
+            F.replace(
+                F.col("s"), F.lit(f",{lft},,{rgt},"), F.lit(f",{merged},")
+            ),
+        )
+
+    _BPE_MEMO[key] = (merges, cur)
+    return merges, cur
+
+
+def _oracle_chain(n_merges: int = BPE_MERGES) -> str:
+    """The shared unrolled-iteration CTE chain: v1..v{n+1} vocab states
+    and m1..m{n} chosen merges, generated to stay in lockstep with the
+    Spark loop (same tie-break, same wrapped-replace application)."""
+    # AS MATERIALIZED is load-bearing: DuckDB inlines plain CTEs, and
+    # each v{i} is referenced twice (p{i} and v{i+1}) — un-materialized,
+    # the chain expands to 2^n copies of the corpus scan
+    parts = [
+        f"""v1 AS MATERIALIZED (
+      SELECT tok,
+             ',' || array_to_string(list_append(string_split(tok, ''), '{EOW}'), ',,') || ',' AS s,
+             c
+      FROM (SELECT tok, CAST(COUNT(*) AS BIGINT) AS c
+            FROM (SELECT unnest({TOKENS_DUCK}) AS tok FROM documents)
+            GROUP BY tok)
+    )"""
+    ]
+    for i in range(1, n_merges + 1):
+        sel = f"(SELECT pr FROM m{i})"
+        parts.append(
+            f"""p{i} AS (
+      SELECT unnest({_BPE_PAIRS_DUCK}) AS pr, c
+      FROM (SELECT {_SYMS_DUCK} AS l, c FROM v{i})
+    ), m{i} AS MATERIALIZED (
+      SELECT pr, SUM(c) AS cnt FROM p{i} GROUP BY pr
+      ORDER BY cnt DESC, pr ASC LIMIT 1
+    ), v{i + 1} AS MATERIALIZED (
+      SELECT tok,
+             replace(s,
+               ',' || string_split({sel}, '|')[1] || ',,' || string_split({sel}, '|')[2] || ',',
+               ',' || replace({sel}, '|', '') || ',') AS s,
+             c
+      FROM v{i}
+    )"""
+        )
+    return ",\n    ".join(parts)
+
+
+def _bpe_train_oracle(n_merges: int = BPE_MERGES) -> str:
+    rows = "\n      UNION ALL ".join(
+        f"SELECT {i} AS merge_rank, string_split(pr, '|')[1] AS lft, "
+        f"string_split(pr, '|')[2] AS rgt, replace(pr, '|', '') AS merged, "
+        f"CAST(cnt AS BIGINT) AS pair_count FROM m{i}"
+        for i in range(1, n_merges + 1)
+    )
+    return f"""
+    WITH {_oracle_chain(n_merges)}
+    SELECT * FROM (
+      {rows}
+    ) ORDER BY merge_rank
+    """
+
+
+_TRAIN_SCHEMA = T.StructType(
+    [
+        T.StructField("merge_rank", T.IntegerType()),
+        T.StructField("lft", T.StringType()),
+        T.StructField("rgt", T.StringType()),
+        T.StructField("merged", T.StringType()),
+        T.StructField("pair_count", T.LongType()),
+    ]
+)
+
+
+@register(
+    "text_bpe_train",
+    oracle=_bpe_train_oracle(),
+    doc="BPE merge trainer (Sennrich et al. 2016): the first "
+    f"{BPE_MERGES} learned merge rules with their pair counts. Plan: "
+    "one corpus scan builds the word-count table (explode + hash agg "
+    "with map-side partials); each iteration aggregates adjacent-pair "
+    "counts over that Heaps'-bounded cached table and collects exactly "
+    "one argmax row to the driver (ties break count DESC, pair ASC); "
+    "merge application is a narrow wrapped-symbol replace — greedy "
+    "left-to-right semantics proved against an independent Python "
+    "implementation in the BPE tests.",
+    tags=("text", "pipeline"),
+)
+def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
+    merges, _ = bpe_train_state(spark, sf_dir)
+    return spark.createDataFrame(merges, _TRAIN_SCHEMA).orderBy("merge_rank")
+
+
+_BPE_FERTILITY_ORACLE = f"""
+    WITH {_oracle_chain()},
+    np AS (
+      SELECT tok, len({_SYMS_DUCK}) AS np FROM v{BPE_MERGES + 1}
+    ),
+    corp AS (
+      SELECT source, unnest({TOKENS_DUCK}) AS tok FROM documents
+    )
+    SELECT source,
+           CAST(COUNT(*) AS BIGINT) AS n_tokens,
+           CAST(SUM(np.np) AS BIGINT) AS n_pieces,
+           {pround_sql('SUM(np.np) * 1.0 / COUNT(*)')} AS fertility
+    FROM corp JOIN np USING (tok)
+    GROUP BY source ORDER BY source
+    """
+
+
+@register(
+    "text_bpe_fertility",
+    oracle=_BPE_FERTILITY_ORACLE,
+    doc="Subword fertility audit of the learned BPE vocabulary: per "
+    "source, word tokens, BPE pieces after applying the learned merges, "
+    "and pieces-per-token fertility (high fertility = the shard's text "
+    "fragments under the vocabulary, i.e. domain mismatch). Plan: the "
+    "trainer's final vocab table maps word->piece-count (dimension-"
+    "sized, size-capped broadcast); the corpus token stream joins it "
+    "map-side and aggregates per source — one corpus scan, no "
+    "corpus-sized shuffle.",
+    tags=("text", "pipeline"),
+)
+def text_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
+    _, vocab = bpe_train_state(spark, sf_dir)
+    np_df = vocab.select(
+        "tok", F.size(F.expr(_SYMS_SPARK)).cast("bigint").alias("np")
+    )
+    corp = docs(spark, sf_dir).select(
+        "source", F.explode(tokens_col()).alias("tok")
+    )
+    return (
+        corp.join(maybe_broadcast(np_df), "tok")
+        .groupBy("source")
+        .agg(
+            F.count("*").cast("bigint").alias("n_tokens"),
+            F.sum("np").cast("bigint").alias("n_pieces"),
+            pround(F.sum("np") * 1.0 / F.count("*")).alias("fertility"),
+        )
+        .orderBy("source")
+    )
+
+
+# --- artifact-served BPE: build once per corpus snapshot -------------------
+
+
+def bpe_layout(spark: SparkSession, sf_dir: str) -> str:
+    """Build-once BPE artifact for ``sf_dir``: the learned merge table
+    (merges.json — N rows, KB-scale) plus the post-merge vocab parquet
+    (tok, s, c) that tokenization/fertility consumers join against.
+    Cache key is the content-addressed corpus snapshot, so a refreshed
+    corpus retrains automatically. At 100 TB this is how a tokenizer
+    actually ships: train once per corpus snapshot, serve the merge
+    table everywhere."""
+    import json
+
+    from roapi_spark.functions.snapshot import build_once, snapshot_cache_dir
+
+    src = os.path.join(sf_dir, "documents.parquet")
+    out = snapshot_cache_dir(src, f"bpe-m{BPE_MERGES}-v1")
+
+    def _ready(d: str) -> bool:
+        return os.path.exists(os.path.join(d, "_BPE_READY"))
+
+    def _build(tmp: str) -> None:
+        merges, vocab = bpe_train_state(spark, sf_dir)
+        vocab.write.mode("overwrite").parquet(os.path.join(tmp, "vocab"))
+        with open(os.path.join(tmp, "merges.json"), "w") as f:
+            json.dump(merges, f)
+        open(os.path.join(tmp, "_BPE_READY"), "w").close()
+
+    return build_once(out, _ready, _build)
+
+
+@register(
+    "text_bpe_train_served",
+    oracle=_bpe_train_oracle(),
+    doc="Same result contract as text_bpe_train (identical oracle), "
+    "served from the build-once bpe-m8-v1 artifact: the merge table is "
+    "a KB-scale driver read, so a consumer (tokenizer worker, fertility "
+    "audit, data card) pays zero training jobs per call. The iterative "
+    "trainer runs once per corpus snapshot — the deploy shape of every "
+    "production tokenizer.",
+    tags=("text", "pipeline", "artifact"),
+)
+def text_bpe_train_served(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import json
+
+    layout = bpe_layout(spark, sf_dir)
+    with open(os.path.join(layout, "merges.json")) as f:
+        merges = [tuple(m) for m in json.load(f)]
+    return spark.createDataFrame(merges, _TRAIN_SCHEMA).orderBy("merge_rank")
+
+
+@register(
+    "text_bpe_fertility_served",
+    oracle=_BPE_FERTILITY_ORACLE,
+    doc="Same result contract as text_bpe_fertility (identical oracle), "
+    "but the word->piece-count side comes from the artifact's vocab "
+    "parquet instead of retraining: one corpus token scan + a size-"
+    "capped broadcast join, zero training jobs per call.",
+    tags=("text", "pipeline", "artifact"),
+)
+def text_bpe_fertility_served(spark: SparkSession, sf_dir: str) -> DataFrame:
+    layout = bpe_layout(spark, sf_dir)
+    vocab = spark.read.parquet(os.path.join(layout, "vocab"))
+    np_df = vocab.select(
+        "tok", F.size(F.expr(_SYMS_SPARK)).cast("bigint").alias("np")
+    )
+    corp = docs(spark, sf_dir).select(
+        "source", F.explode(tokens_col()).alias("tok")
+    )
+    return (
+        corp.join(maybe_broadcast(np_df), "tok")
+        .groupBy("source")
+        .agg(
+            F.count("*").cast("bigint").alias("n_tokens"),
+            F.sum("np").cast("bigint").alias("n_pieces"),
+            pround(F.sum("np") * 1.0 / F.count("*")).alias("fertility"),
+        )
+        .orderBy("source")
+    )
+
+
+def _encode_oracle() -> str:
+    """Per-doc encode oracle: the same map-side construction — wrapped
+    token stream, the 8 learned merges applied as nested replaces (the
+    merge table comes from the shared m{i} CTEs), then the readable
+    piece sequence is split back out and hashed."""
+    base = (
+        "array_to_string(list_transform(t, tok -> ',' || "
+        f"array_to_string(list_append(string_split(tok, ''), '{EOW}'), ',,')"
+        " || ','), ' ')"
+    )
+    expr = base
+    for i in range(1, BPE_MERGES + 1):
+        sel = f"(SELECT pr FROM m{i})"
+        pat = (
+            f"',' || string_split({sel}, '|')[1] || ',,' || "
+            f"string_split({sel}, '|')[2] || ','"
+        )
+        rep = f"',' || replace({sel}, '|', '') || ','"
+        expr = f"replace({expr}, {pat}, {rep})"
+    return f"""
+    WITH {_oracle_chain()},
+    enc AS (
+      SELECT doc_id,
+             list_filter(string_split_regex({expr}, '[, ]+'), x -> x <> '')
+               AS pieces
+      FROM (SELECT doc_id, {TOKENS_DUCK} AS t FROM documents)
+      WHERE len(t) > 0
+    )
+    SELECT doc_id,
+           CAST(len(pieces) AS BIGINT) AS n_pieces,
+           MD5(array_to_string(pieces, ' ')) AS piece_hash
+    FROM enc ORDER BY doc_id
+    """
+
+
+@register(
+    "text_bpe_encode",
+    oracle=_encode_oracle(),
+    doc="The tokenization pass itself: every document encoded into its "
+    "BPE piece sequence under the learned merge table (per-doc piece "
+    "count + an md5 over the ordered pieces, so a wrong merge order or "
+    "a boundary-crossing merge hash-mismatches). Plan: MAP-SIDE ONLY — "
+    "the merge table is 8 driver-side rows from the bpe-m8-v1 artifact "
+    "inlined as replace literals, each doc's token stream is wrapped "
+    "and rewritten in a single narrow projection: FileScan + Project, "
+    "zero shuffle, zero join (space separators between tokens cannot "
+    "match any ',l,,r,' pattern, so merges never cross word "
+    "boundaries). At 100 TB this is the shape you want for the most "
+    "corpus-intensive pass in the pipeline: embarrassingly parallel, "
+    "no vocab-sized state per executor beyond 8 literals.",
+    tags=("text", "pipeline", "artifact"),
+)
+def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import json
+
+    layout = bpe_layout(spark, sf_dir)
+    with open(os.path.join(layout, "merges.json")) as f:
+        merges = json.load(f)
+    t = tokens_col()
+    wrapped = F.array_join(
+        F.transform(
+            t,
+            lambda tok: F.concat(
+                F.lit(","),
+                F.array_join(
+                    F.concat(
+                        F.filter(F.split(tok, ""), lambda x: F.length(x) > 0),
+                        F.array(F.lit(EOW)),
+                    ),
+                    ",,",
+                ),
+                F.lit(","),
+            ),
+        ),
+        " ",
+    )
+    s = wrapped
+    for _rank, lft, rgt, merged, _cnt in merges:
+        s = F.replace(s, F.lit(f",{lft},,{rgt},"), F.lit(f",{merged},"))
+    pieces = F.filter(F.split(s, "[, ]+"), lambda x: F.length(x) > 0)
+    # no orderBy: the correctness compare is order-insensitive, and a
+    # presentation sort would cost a range exchange on the single pure
+    # map-side pass in the registry
+    return (
+        docs(spark, sf_dir)
+        .filter(F.size(t) > 0)
+        .select(
+            "doc_id",
+            F.size(pieces).cast("bigint").alias("n_pieces"),
+            F.md5(F.array_join(pieces, " ")).alias("piece_hash"),
+        )
+    )
+
+
+# --- sequence packing under the REAL tokenizer -----------------------------
+
+PACK_PIECES = 512  # pieces per packed training sequence
+
+
+@register(
+    "text_seq_pack_bpe",
+    oracle=f"""
+    WITH {_oracle_chain()},
+    np AS (
+      SELECT tok, len({_SYMS_DUCK}) AS np FROM v{BPE_MERGES + 1}
+    ),
+    dnp AS (
+      SELECT d.doc_id, d.source, COALESCE(s.np, 0) AS n_pieces
+      FROM documents d LEFT JOIN (
+        SELECT doc_id, CAST(SUM(np.np) AS BIGINT) AS np
+        FROM (SELECT doc_id, unnest({TOKENS_DUCK}) AS tok FROM documents) t
+        JOIN np USING (tok)
+        GROUP BY doc_id
+      ) s USING (doc_id)
+    ),
+    c AS (
+      SELECT doc_id, source, n_pieces,
+             COALESCE(SUM(n_pieces) OVER (
+               PARTITION BY source ORDER BY doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
+      FROM dnp
+    )
+    SELECT doc_id, source, CAST(n_pieces AS BIGINT) AS n_pieces,
+           CAST(FLOOR(cb / {PACK_PIECES}.0) AS BIGINT) AS pack_id,
+           CAST(cb % {PACK_PIECES} AS BIGINT) AS pack_offset
+    FROM c ORDER BY source, doc_id
+    """,
+    doc="GPT-style sequence packing under the TRAINED tokenizer: every "
+    "document's length is its BPE piece count (from the bpe-m8-v1 "
+    "vocab), and docs pack greedily into "
+    f"{PACK_PIECES}-piece training sequences per source — the packing a "
+    "training job actually runs, where budget is measured in the "
+    "tokenizer's units, not whitespace words (text_seq_pack's "
+    "approximation drifts exactly where fertility > 1). Plan: piece "
+    "counts via one size-capped broadcast join of the artifact vocab "
+    "onto the token stream + a doc-keyed agg; the cumulative pack "
+    "assignment is a per-source running sum (same window pattern as "
+    "text_seq_pack; the distributed-prefix-sum variant for sources "
+    "bigger than a partition is q_token_budget_shards' documented "
+    "pattern).",
+    tags=("text", "pipeline", "artifact"),
+)
+def text_seq_pack_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.window import Window
+
+    layout = bpe_layout(spark, sf_dir)
+    vocab = spark.read.parquet(os.path.join(layout, "vocab"))
+    np_df = vocab.select(
+        "tok", F.size(F.expr(_SYMS_SPARK)).cast("bigint").alias("np")
+    )
+    per_doc = (
+        docs(spark, sf_dir)
+        .select("doc_id", F.explode(tokens_col()).alias("tok"))
+        .join(maybe_broadcast(np_df), "tok")
+        .groupBy("doc_id")
+        .agg(F.sum("np").cast("bigint").alias("np"))
+    )
+    dnp = (
+        docs(spark, sf_dir)
+        .select("doc_id", "source")
+        .join(per_doc, "doc_id", "left")
+        .select(
+            "doc_id", "source", F.coalesce("np", F.lit(0)).alias("n_pieces")
+        )
+    )
+    w = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    c = dnp.select(
+        "doc_id",
+        "source",
+        "n_pieces",
+        F.coalesce(F.sum("n_pieces").over(w), F.lit(0)).alias("cb"),
+    )
+    return c.select(
+        "doc_id",
+        "source",
+        F.col("n_pieces").cast("bigint").alias("n_pieces"),
+        F.floor(F.col("cb") / float(PACK_PIECES)).cast("bigint").alias("pack_id"),
+        (F.col("cb") % PACK_PIECES).cast("bigint").alias("pack_offset"),
+    ).orderBy("source", "doc_id")
+
 
 MAX_W = 10  # training units truncated to this many chars (DP bound)
 MAX_P = 4  # max piece length
@@ -86,11 +740,11 @@ _SKS = [
 # greatest(...) guard: a letter-free document tokenizes to [] and
 # slice(l, 1, -1) throws — the guard makes it an empty pair list, the
 # same result the DuckDB range(1, len(l)) side produces
-_PAIRS_SPARK = (
+_UNIGRAM_PAIRS_SPARK = (
     "transform(slice(l, 1, greatest(size(l)-1, 0)), (x, i) -> "
     "substring(concat(x, '_', element_at(l, i+2)), 1, {mw}))"
 ).format(mw=MAX_W)
-_PAIRS_DUCK = (
+_UNIGRAM_PAIRS_DUCK = (
     "list_transform(range(1, len(l)), j -> "
     "substr(l[j] || '_' || l[j+1], 1, {mw}))"
 ).format(mw=MAX_W)
@@ -105,8 +759,8 @@ def _base_ctes() -> list[str]:
     return [
         f"""wt AS MATERIALIZED (
       SELECT pr AS w, CAST(COUNT(*) AS BIGINT) AS c
-      FROM (SELECT unnest({_PAIRS_DUCK}) AS pr
-            FROM (SELECT {_TOKENS_SQL_DUCK} AS l FROM documents))
+      FROM (SELECT unnest({_UNIGRAM_PAIRS_DUCK}) AS pr
+            FROM (SELECT {TOKENS_DUCK} AS l FROM documents))
       GROUP BY 1
     )""",
         "pos AS (SELECT w, c, unnest(generate_series(1, length(w))) AS s FROM wt)",
@@ -237,7 +891,7 @@ def _chain(with_final_seg: bool = False) -> str:
     return ",\n".join(parts)
 
 
-def _train_oracle() -> str:
+def _unigram_train_oracle() -> str:
     rows = "\n UNION ALL ".join(
         f"""SELECT {it} AS it,
       (SELECT CAST(SUM(cnt) AS BIGINT) FROM v{it}) AS total_pieces,
@@ -257,12 +911,12 @@ _VOCAB_ORACLE = (
     f"ORDER BY cnt DESC, piece LIMIT {_VOCAB_TOP}"
 )
 
-_FERTILITY_ORACLE = f"""
+_UNIGRAM_FERTILITY_ORACLE = f"""
     WITH {_chain(with_final_seg=True)},
     np AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS np FROM seg{EM_T} GROUP BY w),
     corp AS (
-      SELECT source, unnest({_PAIRS_DUCK}) AS w
-      FROM (SELECT source, {_TOKENS_SQL_DUCK} AS l FROM documents)
+      SELECT source, unnest({_UNIGRAM_PAIRS_DUCK}) AS w
+      FROM (SELECT source, {TOKENS_DUCK} AS l FROM documents)
     )
     SELECT source,
            CAST(COUNT(*) AS BIGINT) AS n_units,
@@ -317,7 +971,7 @@ def _units(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs(spark, sf_dir)
         .select(tokens_col().alias("l"))
-        .select(F.explode(F.expr(_PAIRS_SPARK)).alias("w"))
+        .select(F.explode(F.expr(_UNIGRAM_PAIRS_SPARK)).alias("w"))
         .groupBy("w")
         .agg(F.count("*").cast("bigint").alias("c"))
     )
@@ -342,7 +996,7 @@ _SEG_SCHEMA = "w string, c bigint, piece string"
 # process-local memo (same pattern as bpe_train_state): the trainer is
 # iterative with vocab-sized driver collects; queries sharing a corpus
 # reuse the learned state
-_MEMO: dict[tuple, tuple] = {}
+_UNIGRAM_MEMO: dict[tuple, tuple] = {}
 
 
 def unigram_train_state(
@@ -359,7 +1013,7 @@ def unigram_train_state(
         os.path.realpath(path),
         os.path.getmtime(path),
     )
-    hit = _MEMO.get(key)
+    hit = _UNIGRAM_MEMO.get(key)
     if hit is not None:
         return hit
 
@@ -411,7 +1065,7 @@ def unigram_train_state(
         traj.append(snapshot(it, counts))
 
     state = (traj, counts, _costs_of(counts))
-    _MEMO[key] = state
+    _UNIGRAM_MEMO[key] = state
     return state
 
 
@@ -428,7 +1082,7 @@ _TRAJ_SCHEMA = T.StructType(
 
 @register(
     "text_unigram_train",
-    oracle=_train_oracle(),
+    oracle=_unigram_train_oracle(),
     doc="Unigram-LM subword trainer (Kudo 2018, SentencePiece default), "
     f"hard-EM variant: {EM_T} Viterbi-EM iterations over adjacent-word-"
     "pair units with integer fixed-point neg-log-prob costs; one row "
@@ -472,7 +1126,7 @@ def text_unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_unigram_fertility",
-    oracle=_FERTILITY_ORACLE,
+    oracle=_UNIGRAM_FERTILITY_ORACLE,
     doc="Fertility audit of the learned unigram vocabulary: per source, "
     "training units, Viterbi pieces under the FINAL model, and "
     "pieces-per-unit fertility (the shard-level domain-fit metric, "
@@ -494,7 +1148,7 @@ def text_unigram_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     corp = (
         docs(spark, sf_dir)
         .select("source", tokens_col().alias("l"))
-        .select("source", F.explode(F.expr(_PAIRS_SPARK)).alias("w"))
+        .select("source", F.explode(F.expr(_UNIGRAM_PAIRS_SPARK)).alias("w"))
     )
     return (
         corp.join(maybe_broadcast(np_df), "w")
@@ -522,8 +1176,8 @@ _ENCODE_ORACLE = f"""
       FROM h{EM_T}_{MAX_W}
     ),
     corp AS (
-      SELECT doc_id, {_PAIRS_DUCK} AS pl
-      FROM (SELECT doc_id, {_TOKENS_SQL_DUCK} AS l FROM documents
+      SELECT doc_id, {_UNIGRAM_PAIRS_DUCK} AS pl
+      FROM (SELECT doc_id, {TOKENS_DUCK} AS l FROM documents
             WHERE doc_id % {_ENC_SAMPLE} = 0)
     ),
     units AS (
@@ -581,7 +1235,7 @@ def text_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", tokens_col().alias("l"))
         .select(
             "doc_id",
-            F.posexplode(F.expr(_PAIRS_SPARK)).alias("i0", "w"),
+            F.posexplode(F.expr(_UNIGRAM_PAIRS_SPARK)).alias("i0", "w"),
         )
         .select(
             "doc_id", (F.col("i0") + 1).cast("bigint").alias("unit_idx"), "w"
@@ -643,7 +1297,7 @@ def unigram_layout(spark: SparkSession, sf_dir: str) -> str:
 
 @register(
     "text_unigram_train_served",
-    oracle=_train_oracle(),
+    oracle=_unigram_train_oracle(),
     doc="Same result contract as text_unigram_train (identical full-"
     "training-replay oracle), served from the build-once unigram-t2-v1 "
     "artifact: the trajectory is a KB-scale driver read, so a consumer "
@@ -669,20 +1323,17 @@ def _compare_oracle() -> str:
     subqueries (each carries its own WITH chain; DuckDB scopes CTE names
     per subquery, so the BPE chain's v{i} and the unigram chain's v{i}
     never collide)."""
-    from roapi_spark.functions.pipeline12 import _FERTILITY_ORACLE
 
     return f"""
     SELECT b.source,
            b.fertility AS bpe_fertility,
            u.fertility AS unigram_fertility,
            {pround_sql("u.fertility / b.fertility")} AS uni_over_bpe
-    FROM ({_FERTILITY_ORACLE}) b
-    JOIN ({_FERTILITY_ORACLE_UNIGRAM}) u USING (source)
+    FROM ({_BPE_FERTILITY_ORACLE}) b
+    JOIN ({_UNIGRAM_FERTILITY_ORACLE}) u USING (source)
     ORDER BY source
     """
 
-
-_FERTILITY_ORACLE_UNIGRAM = _FERTILITY_ORACLE  # alias for readability
 
 
 @register(
@@ -701,7 +1352,6 @@ _FERTILITY_ORACLE_UNIGRAM = _FERTILITY_ORACLE  # alias for readability
     tags=("text", "pipeline", "ml"),
 )
 def text_tokenizer_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from roapi_spark.functions.pipeline12 import text_bpe_fertility
 
     bpe = text_bpe_fertility(spark, sf_dir).select(
         "source", F.col("fertility").alias("bpe_fertility")
@@ -871,7 +1521,7 @@ def _em_oracle() -> str:
         f"""eut AS MATERIALIZED (
       SELECT substr(t, 1, {_EM_W}) AS w, CAST(COUNT(*) AS BIGINT) AS c
       FROM (SELECT unnest(l) AS t
-            FROM (SELECT {_TOKENS_SQL_DUCK} AS l FROM documents))
+            FROM (SELECT {TOKENS_DUCK} AS l FROM documents))
       GROUP BY 1
     )""",
         "eposn AS (SELECT w, c, "

@@ -442,12 +442,6 @@ def _write_code_lengths(bw: _LSBWriter, lengths: list[int]) -> None:
     bw.write_many(vals, widths)
 
 
-def _write_symbol(bw: _LSBWriter, codes: dict, sym: int) -> None:
-    code, width = codes[sym]
-    for b in range(width - 1, -1, -1):
-        bw.write((code >> b) & 1, 1)
-
-
 # predictor modes (VP8L spec 4.2.2); a = left, b = top, c = top-left,
 # d = top-right; all arithmetic per channel uint8 with wraparound
 def _avg2(x, y):

@@ -480,7 +480,7 @@ class ApiServer:
                 ts = parse_table_config({"name": name, "uri": uri, "option": cfg.get("option") or {}})
                 self.catalog.load_table(ts, dynamic=True)
             elif name in self.catalog.sources:
-                self.catalog.refresh_table(name)  # re-register (register.rs:36-38)
+                self.catalog.refresh_table(name, dynamic=True)  # register.rs:36-38
             else:
                 raise ApiError(400, "register_table", f"Table `{name}` source not exists")
 

@@ -4,7 +4,7 @@ publishes everything as ``.warc.gz``).
 
 No reference parity — columnq has no WARC loader — this is part of the
 training-data-pipeline extension surface, feeding the HTML-extraction /
-URL-canonicalization / crawl-funnel operators (functions/pipeline14.py).
+URL-canonicalization / crawl-funnel operators (functions/crawl.py).
 
 Format (from the spec, not a library):
 

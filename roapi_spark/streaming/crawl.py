@@ -9,7 +9,7 @@ binaryFile file-stream cursor (exactly-once per-file delivery):
   documents appended to a Delta table, one atomic commit per batch
 
 No reference parity (roapi has no streaming surface at all) — this is
-the streaming twin of the batch crawl funnel (functions/pipeline14.py):
+the streaming twin of the batch crawl funnel (functions/crawl.py):
 the deploy shape where a fetcher fleet drops ``.warc.gz`` files into
 object storage and the corpus pipeline consumes them incrementally
 instead of re-scanning the crawl.

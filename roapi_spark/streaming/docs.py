@@ -30,11 +30,10 @@ from pyspark.sql import functions as F
 from roapi_spark.functions.dedup import (
     N_MINHASH,
     band_col as _band_col,
-    docs as corpus_docs,
     minhash_signatures,
     shingle_array_of,
-    tokens_col,
 )
+from roapi_spark.functions.text import docs as corpus_docs, tokens_col
 
 DOCS_SCHEMA = T.StructType(
     [
@@ -147,8 +146,7 @@ def corpus_gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct gram), built once, never rebuilt per stream start."""
     import os
 
-    from roapi_spark.functions.pipeline6 import _positional_grams
-    from roapi_spark.functions.pipeline10 import REWRITE_K, _toks
+    from roapi_spark.functions.dedup import REWRITE_K, doc_tokens, positional_grams
     from roapi_spark.functions.snapshot import (
         build_once,
         parquet_ready,
@@ -160,9 +158,9 @@ def corpus_gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _build(tmp: str) -> None:
         (
-            _toks(spark, sf_dir)
+            doc_tokens(spark, sf_dir)
             .filter(F.size("w") >= REWRITE_K)
-            .select(F.explode(_positional_grams(F.col("w"))).alias("gram"))
+            .select(F.explode(positional_grams(F.col("w"))).alias("gram"))
             .select(F.md5("gram").alias("g"))
             .distinct()
             .write.mode("overwrite")
@@ -191,8 +189,7 @@ def span_clean_stream(
     bloom-pruned lookup), covered starts re-aggregated per (doc_id, ts)
     under the watermark, then the same map-side cut-and-reassemble as
     the batch rebuild. Docs shorter than K bypass the join entirely."""
-    from roapi_spark.functions.pipeline6 import _positional_grams
-    from roapi_spark.functions.pipeline10 import REWRITE_K
+    from roapi_spark.functions.dedup import REWRITE_K, positional_grams
 
     s = stream.withWatermark("ts", watermark)
     toks = s.select("doc_id", "ts", tokens_col().alias("w"))
@@ -206,7 +203,7 @@ def span_clean_stream(
         "doc_id",
         "ts",
         "w",
-        F.posexplode(_positional_grams(F.col("w"))).alias("i", "gram"),
+        F.posexplode(positional_grams(F.col("w"))).alias("i", "gram"),
     ).select(
         "doc_id",
         "ts",
@@ -257,7 +254,7 @@ def span_clean_stream(
 
 def quality_screen_stream(stream: DataFrame, weights: list[int]) -> DataFrame:
     """Quality-gate arriving documents with the trained fixed-point LR
-    head (functions.pipeline12): per doc the rule label, the scaled
+    head (functions.quality): per doc the rule label, the scaled
     score, and the keep decision.
 
     This is the landing-zone screen in front of the corpus: the batch
@@ -266,7 +263,7 @@ def quality_screen_stream(stream: DataFrame, weights: list[int]) -> DataFrame:
     zero state, zero shuffle, throughput bounded only by ingest. The
     feature expressions are imported from the batch trainer
     (lr_feature_frame), so the two paths cannot drift."""
-    from roapi_spark.functions.pipeline12 import lr_feature_frame, lr_score_cols
+    from roapi_spark.functions.quality import lr_feature_frame, lr_score_cols
 
     feats = lr_feature_frame(stream, ["doc_id", "ts"])
     yh, keep = lr_score_cols(weights)

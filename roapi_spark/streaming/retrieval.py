@@ -1,5 +1,5 @@
 """Streaming retrieval: score ARRIVING documents against the static
-BM25 inverted index (`roapi_spark.functions.pipeline7.bm25_index`).
+BM25 inverted index (`roapi_spark.functions.similarity.bm25_index`).
 
 This is the online half of the retrieval story: the index is the
 once-per-corpus-snapshot artifact; new documents (queries, candidate
@@ -54,11 +54,7 @@ def bm25_score_stream(
     index of ``sf_dir`` — identical scores to the batch
     ``q_bm25_topk_served`` before its top-k cut (same constants, same
     rounding)."""
-    from roapi_spark.functions.pipeline7 import (
-        BM25_B,
-        BM25_K1,
-        bm25_index,
-    )
+    from roapi_spark.functions.similarity import BM25_B, BM25_K1, bm25_index
     from roapi_spark.functions.text import tokens_col
     from roapi_spark.util import pround
 
@@ -104,7 +100,7 @@ def perplexity_score_stream(
 ) -> DataFrame:
     """(doc_id, n_bigrams, bits_per_bigram) per arriving document,
     scored against the static bigram LM of ``sf_dir``
-    (`roapi_spark.functions.pipeline8.bigram_lm_index`) — the online
+    (`roapi_spark.functions.quality.bigram_lm_index`) — the online
     quality gate of a CCNet-style ingest: the LM count tables are the
     once-per-corpus-snapshot artifact, each micro-batch scores its docs
     with two STREAM-STATIC equi-joins (bc on the bigram, uc on the
@@ -115,11 +111,7 @@ def perplexity_score_stream(
     constants, same rounding; per-instance summation differs from the
     batch's grouped n*log only in float association, absorbed by the
     4-decimal rounding)."""
-    from roapi_spark.functions.pipeline8 import (
-        _bigrams_over,
-        bigram_lm_index,
-        lm_bits_expr,
-    )
+    from roapi_spark.functions.quality import bigram_lm_index, bigrams_over, lm_bits_expr
     from roapi_spark.functions.text import tokens_col
     from roapi_spark.util import pround
 
@@ -127,7 +119,7 @@ def perplexity_score_stream(
     bc = spark.read.parquet(os.path.join(out, "bc"))
     uc = spark.read.parquet(os.path.join(out, "uc"))
     bgs = stream.select("doc_id", tokens_col().alias("w")).select(
-        "doc_id", F.explode(_bigrams_over("w")).alias("bg")
+        "doc_id", F.explode(bigrams_over("w")).alias("bg")
     )
     contrib = (
         bgs.select("doc_id", F.col("bg.prev").alias("prev"), F.col("bg.cur").alias("cur"))

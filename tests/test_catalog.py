@@ -118,6 +118,62 @@ def test_refresh_swaps_view(spark, tmp_path):
         cat.stop_refresh_loop()
 
 
+def test_refresh_loop_counts_interval_from_load(spark, tmp_path, monkeypatch):
+    """A table loaded just now is not reloaded on the first poll: the
+    interval runs from the load, not from the monotonic clock's zero
+    (which a long-running host passed long ago)."""
+    import roapi_spark.catalog as catalog_mod
+
+    class _LongUptime:
+        """``time`` with a monotonic clock a day past its zero."""
+
+        def __getattr__(self, name):
+            return getattr(time, name)
+
+        @staticmethod
+        def monotonic() -> float:
+            return time.monotonic() + 86400.0
+
+    monkeypatch.setattr(catalog_mod, "time", _LongUptime())
+    p = tmp_path / "r.csv"
+    p.write_text("id\n1\n")
+    cat = Catalog(spark)
+    cat.load_table(parse_table_config({"name": "r", "uri": str(p), "reload_interval": 3600}))
+    calls = []
+    monkeypatch.setattr(cat, "refresh_table", lambda name, dynamic=False: calls.append(name))
+    cat.start_refresh_loop(poll_interval=0.05)
+    try:
+        time.sleep(0.5)
+    finally:
+        cat.stop_refresh_loop()
+    assert calls == []
+
+
+def test_refresh_table_read_only_gate(spark, csv_file, monkeypatch):
+    """An API-initiated refresh is a dynamic write like register: refused
+    on a read-only catalog before any reload; the background loop's
+    refresh, and any refresh on a writable catalog, still reload."""
+    import roapi_spark.catalog as catalog_mod
+
+    loads = []
+    real_load = catalog_mod._load
+    monkeypatch.setattr(
+        catalog_mod, "_load", lambda *a, **k: loads.append(a) or real_load(*a, **k)
+    )
+    ts = parse_table_config({"name": "t", "uri": str(csv_file)})
+    ro = Catalog(spark, read_only=True)
+    ro.load_table(ts)
+    with pytest.raises(ReadOnlyError):
+        ro.refresh_table("t", dynamic=True)
+    assert len(loads) == 1
+    ro.refresh_table("t")  # the refresh loop's call
+    assert len(loads) == 2
+    rw = Catalog(spark, read_only=False)
+    rw.load_table(ts)
+    rw.refresh_table("t", dynamic=True)
+    assert len(loads) == 4
+
+
 def test_catalog_from_config(spark, csv_file):
     cfg = parse_config(
         {"tables": [{"name": "t", "uri": str(csv_file)}], "read_only": True}

@@ -4,7 +4,7 @@ optimizer nor change the fixed point once reached.
 
 Round-13 verdict item: q_crawl_hits ran at 2 iterations with unbounded
 lineage — fine at 2, fatal at the 20-50 a convergence run needs. The
-iteration body now lives in pipeline16.hits_scores/_hits_step with a
+iteration body now lives in crawl.hits_scores/_hits_step with a
 checkpoint per step; this test drives it to convergence on a graph
 whose exact fixed point is known.
 """
@@ -15,11 +15,7 @@ import time
 
 from pyspark.sql import functions as F
 
-from roapi_spark.functions.pipeline16 import (
-    _HITS_SCALE,
-    hits_converged,
-    hits_scores,
-)
+from roapi_spark.functions.crawl import _HITS_SCALE, hits_converged, hits_scores
 
 
 def _graph(spark):

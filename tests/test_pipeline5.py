@@ -10,11 +10,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from roapi_spark.functions.pipeline5 import (
-    q_event_funnel,
-    q_retention_cohort,
-    q_token_len_histogram,
-)
+from roapi_spark.functions.quality import q_token_len_histogram
+from roapi_spark.plans.analytics import q_event_funnel, q_retention_cohort
 
 
 def _write_events(tmp_path, rows):
@@ -98,8 +95,8 @@ def test_token_len_histogram_bucket_boundaries(spark, tmp_path):
 
 def test_keep_best_prefers_longest(spark, sf_dir):
     from roapi_spark.functions.dedup import dedup_components
-    from roapi_spark.functions.pipeline import docs
-    from roapi_spark.functions.pipeline5 import dedup_keep_best
+    from roapi_spark.functions.text import docs
+    from roapi_spark.functions.dedup import dedup_keep_best
 
     kb = {r.component: r for r in dedup_keep_best(spark, sf_dir).collect()}
     if not kb:

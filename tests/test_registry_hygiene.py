@@ -126,3 +126,30 @@ def test_no_unpartitioned_windows_in_package_source():
         "unpartitioned Window specs found (single-partition sort at "
         f"scale):\n" + "\n".join(bad)
     )
+
+
+def test_functions_modules_named_by_domain_with_one_tokenizer():
+    """The batch registry is grouped by domain, and each shared corpus
+    decision has one home in functions/text.py: no round-numbered
+    ``pipeline*.py`` module, one ``docs()`` reader, and the ``[^a-z]+``
+    word tokenizer spelled out only there (oracles interpolate
+    ``TOKENS_DUCK``, builders call ``tokens_col()``)."""
+    pkg = os.path.join(REPO, "roapi_spark")
+    fn_dir = os.path.join(pkg, "functions")
+    numbered = sorted(f for f in os.listdir(fn_dir) if re.fullmatch(r"pipeline\d*\.py", f))
+    assert not numbered, f"round-named modules remain: {numbered}"
+
+    def py_files(sub):
+        root = os.path.join(pkg, sub)
+        for dirpath, _dirs, files in os.walk(root):
+            for f in files:
+                if f.endswith(".py"):
+                    path = os.path.join(dirpath, f)
+                    yield os.path.relpath(path, pkg), open(path).read()
+
+    readers = [rel for rel, src in py_files("functions") for _ in re.findall(r"^def docs\(", src, re.M)]
+    assert readers == [os.path.join("functions", "text.py")], readers
+    spelled = sorted(
+        {rel for sub in ("functions", "streaming") for rel, src in py_files(sub) if "[^a-z]+" in src}
+    )
+    assert spelled == [os.path.join("functions", "text.py")], spelled

@@ -196,6 +196,42 @@ def test_ui_console(base_url):
     assert {"name", "type", "nullable"} <= set(anyf)
 
 
+@pytest.mark.parametrize("read_only, status", [(True, 400), (False, 200)])
+def test_refresh_request_honors_read_only(spark, tmp_path_factory, monkeypatch,
+                                          read_only, status):
+    """POST /api/table with only a tableName re-registers (refreshes) the
+    table; a read-only server answers 400 read_only_mode without
+    reloading it, as roapi does (routes.rs:29-37)."""
+    import roapi_spark.catalog as catalog_mod
+
+    root = tmp_path_factory.mktemp("refresh_gate")
+    (root / "uk_cities.csv").write_text(CSV)
+    cat = Catalog(spark, read_only=read_only)
+    cat.load_table(parse_table_config({"name": "uk_cities", "uri": str(root / "uk_cities.csv")}))
+    loads = []
+    real_load = catalog_mod._load
+    monkeypatch.setattr(
+        catalog_mod, "_load", lambda *a, **k: loads.append(a) or real_load(*a, **k)
+    )
+    srv = ApiServer(cat)
+    host, port = srv.start()
+    body = json.dumps([{"tableName": "uk_cities"}]).encode()
+    try:
+        try:
+            got, _, _ = _req(f"http://{host}:{port}/api/table", "POST", body)
+            err = None
+        except urllib.error.HTTPError as e:
+            got, err = e.code, json.loads(e.read())
+    finally:
+        srv.stop()
+    assert got == status
+    if read_only:
+        assert err["error"] == "read_only_mode"
+        assert loads == []
+    else:
+        assert len(loads) == 1
+
+
 def test_concurrent_refresh_rebind_soak(spark, tmp_path_factory):
     """SURVEY risk register: hammer /api/sql while the refresh loop swaps
     the temp view underneath. Every response must be a complete result

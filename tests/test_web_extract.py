@@ -2,7 +2,7 @@
 extraction (chrome stripping + link-density heuristic) and URL
 canonicalization / registrable-domain expressions. The Spark-expression
 paths are asserted against literal expectations here; their DuckDB
-mirrors are asserted by the pipeline14 oracle gates."""
+mirrors are asserted by the crawl.py oracle gates."""
 
 from __future__ import annotations
 
