@@ -2380,8 +2380,7 @@ def _recrawl_oracle() -> str:
 )
 def q_recrawl_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from roapi_spark.config import TableSource
-    from roapi_spark.functions.fixtures import cdx_fixture_dir
-    from roapi_spark.functions.fixtures import sitemap_fixture_dir
+    from roapi_spark.functions.fixtures import cdx_fixture_dir, sitemap_fixture_dir
     from roapi_spark.functions.web import url_to_surt
     from roapi_spark.sources import load_table
 

@@ -699,10 +699,10 @@ def shingle_pair_graph_cached(
     return spark.read.parquet(pairs_dir), spark.read.parquet(cnt_dir)
 
 
-# DuckDB CTEs reproducing the bands + candidate pairs, DERIVED from the
-# single source of truth (lsh_cand_oracle_cte) so the banding/cap logic
-# can never drift between the pair-set consumers — only the final CTE
-# name differs (pairs vs cand)
+# DuckDB twin of lsh_pairs_cached: CTEs reproducing the bands + candidate
+# pairs, DERIVED from the single source of truth (lsh_cand_oracle_cte) so
+# the banding/cap logic can never drift between the pair-set consumers —
+# only the final CTE name differs (pairs vs cand)
 _LSH_PAIRS_DUCK = f"""{lsh_cand_oracle_cte()},
     pairs AS (SELECT doc_a, doc_b FROM cand)
 """
@@ -1391,7 +1391,6 @@ CONTAIN_MIN = 0.5
     tags=("dedup",),
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     pairs, cnt = shingle_pair_graph_cached(spark, sf_dir)
     ca = cnt.alias("ca")
     cb = cnt.alias("cb")
@@ -1440,7 +1439,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "text", "quality"),
 )
 def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     sh = shingles(docs(spark, sf_dir))
     per_doc = sh.groupBy("doc_id").agg(
         F.count("*").cast("bigint").alias("n_shingles")
@@ -1470,7 +1468,6 @@ PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # d = 0.85 as an exact ratio
 
 
 def _pagerank_oracle() -> str:
-
     base = PR_SCALE * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN  # (1-d)*SCALE
     parts = [
         f"""edges AS (
@@ -1518,7 +1515,6 @@ def _pagerank_oracle() -> str:
     tags=("dedup", "iterative"),
 )
 def q_pagerank_dupgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     pairs = lsh_pairs_cached(spark, sf_dir)
     edges = (
         pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
@@ -1864,7 +1860,6 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _method_agreement_oracle() -> str:
-
     return f"""
     WITH {_LSH_PAIRS_DUCK.strip().lstrip("WITH").strip()},
     cnt AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
@@ -1916,7 +1911,6 @@ def _method_agreement_oracle() -> str:
     tags=("dedup", "audit"),
 )
 def q_dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     lsh = lsh_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
     jac = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     uni = lsh.withColumn("in_lsh", F.lit(True)).join(
@@ -1937,7 +1931,6 @@ def q_dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cross_source_oracle() -> str:
-
     return f"""
     WITH {lsh_cand_oracle_cte()},
     attributed AS (
@@ -1966,7 +1959,6 @@ def _cross_source_oracle() -> str:
     tags=("dedup", "quality", "pipeline"),
 )
 def q_dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     pairs = lsh_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
     src = docs(spark, sf_dir).select("doc_id", "source")
     # the edge set is the small side at any scale (near-dup pairs ~
@@ -1990,7 +1982,6 @@ def q_dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cluster_sizes_oracle() -> str:
-
     return f"""
     WITH RECURSIVE {COMPONENTS_DUCK},
     sizes AS (
@@ -2016,7 +2007,6 @@ def _cluster_sizes_oracle() -> str:
     tags=("dedup", "quality", "pipeline"),
 )
 def q_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     comp = dedup_components(spark, sf_dir)
     sizes = comp.groupBy("component").agg(F.count("*").alias("cluster_size"))
     return (
@@ -2034,7 +2024,6 @@ def q_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_calibration_oracle() -> str:
-
     return f"""
     WITH {lsh_cand_oracle_cte()},
     est AS (
@@ -2088,7 +2077,6 @@ def _minhash_calibration_oracle() -> str:
     tags=("dedup", "quality", "pipeline"),
 )
 def q_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     pairs = lsh_pairs_cached(spark, sf_dir)
     # Pair-bounded on the SCAN side too: only docs that appear in a
     # cached pair get tokenized/shingled (the member set is pair-graph-
@@ -2258,7 +2246,6 @@ FUNNEL_DUCK = """keep_ex AS (SELECT MIN(doc_id) AS doc_id FROM documents GROUP B
 
 
 def _dedup_funnel_oracle() -> str:
-
     return f"""
     WITH RECURSIVE {COMPONENTS_DUCK},
     {FUNNEL_DUCK}
@@ -2496,7 +2483,6 @@ def dedup_span_rewrite_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dup_quality_oracle() -> str:
-
     return f"""
     WITH {lsh_cand_oracle_cte()},
     dupdocs AS (

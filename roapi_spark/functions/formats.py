@@ -1720,8 +1720,6 @@ def q_sql_cdc_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "delta"),
 )
 def stream_cdc_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from roapi_spark.sinks.delta import update_delta
     from roapi_spark.streaming.cdf import stream_table_changes
 

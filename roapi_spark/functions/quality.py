@@ -561,8 +561,6 @@ ZIPF_TOP = 200
     tags=("text", "audit"),
 )
 def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     d = docs(spark, sf_dir)
     toks = d.select(F.explode(tokens_col()).alias("token"))
     counted = toks.groupBy("token").agg(F.count("*").alias("cnt"))
@@ -799,8 +797,6 @@ def text_quality_logit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "audit"),
 )
 def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     toks = docs(spark, sf_dir).select(
         "doc_id", F.explode(tokens_col()).alias("token")
     )
@@ -955,8 +951,6 @@ def lm_bits_expr(c2, c1, v):
     tags=("text", "quality", "pipeline"),
 )
 def q_ngram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-
-
     dbig = (
         docs(spark, sf_dir)
         .select("doc_id", tokens_col().alias("w"))

@@ -1341,7 +1341,6 @@ def _ann_recall_pair(spark, sf_dir, ann_df):
     tags=("similarity", "audit"),
 )
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     return _ann_recall_pair(spark, sf_dir, ann_ivf_kmeans(spark, sf_dir))
 
 
@@ -1355,7 +1354,6 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "audit"),
 )
 def q_ann_recall_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     return _ann_recall_pair(spark, sf_dir, ann_ivf_nprobe(spark, sf_dir))
 
 
@@ -1371,7 +1369,6 @@ def q_ann_recall_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "audit"),
 )
 def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     return _ann_recall_pair(spark, sf_dir, ann_lsh(spark, sf_dir))
 
 
@@ -1418,7 +1415,6 @@ def q_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "audit"),
 )
 def q_lsh_multi_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     return _ann_recall_pair(spark, sf_dir, ann_lsh_multi(spark, sf_dir))
 
 
@@ -1682,7 +1678,6 @@ def q_bm25_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cluster_purity_oracle() -> str:
-
     return f"""
     WITH {kmeans_oracle_prefix()},
     cl AS (
@@ -1718,7 +1713,6 @@ def _cluster_purity_oracle() -> str:
     tags=("similarity", "quality", "pipeline"),
 )
 def q_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     layout_dir, _ = ivf_layout(spark, sf_dir)
     cl = (
         spark.read.parquet(layout_dir)

@@ -193,9 +193,6 @@ def _packing_oracle() -> str:
     tags=("text", "pipeline", "audit"),
 )
 def q_packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-
     p = PACK_TOKENS
     toks = docs(spark, sf_dir).select(
         "doc_id", "source", F.size(words_col()).cast("bigint").alias("n_tokens")
@@ -1352,7 +1349,6 @@ def _compare_oracle() -> str:
     tags=("text", "pipeline", "ml"),
 )
 def text_tokenizer_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     bpe = text_bpe_fertility(spark, sf_dir).select(
         "source", F.col("fertility").alias("bpe_fertility")
     )

@@ -150,8 +150,11 @@ def test_split_leakage_counts_boundary_pairs(spark, tmp_path, monkeypatch):
     # verify against a driver-side recomputation of the same rule
     t = "qa qb qc qd qe qf qg qh qi qj"
     d = _write_docs(tmp_path, {"s": [t, t, "ra rb rc rd re rf rg rh"]})
-    from roapi_spark.functions.selection import q_split_leakage
-    from roapi_spark.functions.selection import SPLIT_TRAIN_PCT, SPLIT_VAL_PCT
+    from roapi_spark.functions.selection import (
+        SPLIT_TRAIN_PCT,
+        SPLIT_VAL_PCT,
+        q_split_leakage,
+    )
 
     def split_of(doc_id: int) -> str:
         b = int(hashlib.md5(str(doc_id).encode()).hexdigest()[:8], 16) % 100
