@@ -149,6 +149,12 @@ class Catalog:
         rejected in read-only mode (roapi/src/api/routes.rs:29-37)."""
         if dynamic and self.read_only:
             raise ReadOnlyError("catalog is read-only; dynamic register disabled")
+        self._load_and_bind(ts, register=True)
+
+    def _load_and_bind(self, ts: TableSource, register: bool) -> None:
+        """The one load sequence behind register and refresh: delta head,
+        stage, load, then bind under the lock (``register`` also records
+        ``ts`` in ``sources``)."""
         # record the delta head BEFORE loading: listing it after would
         # race an external commit landing mid-load (recorded head N+1
         # against a version-N view lets VACUUM skip a needed rebind);
@@ -156,19 +162,25 @@ class Catalog:
         # mismatch only ever causes an extra rebind, never a skip
         head = None
         if self._resolved_fmt(ts) == "delta":
-            from roapi_spark.sources.delta import _log_versions
-
-            head = max(
-                (v for v, _ in _log_versions(
-                    os.path.join(ts.uri, "_delta_log"))),
-                default=-1,
-            )
+            head = self._delta_head(ts.uri)
         df = _load(self.spark, self._stage_source(ts))
         with self._lock:
             self._bind(ts, df)
-            self.sources[ts.name] = ts
+            if register:
+                self.sources[ts.name] = ts
             if head is not None:
                 self._bound_delta_head[ts.name] = head
+
+    @staticmethod
+    def _delta_head(path: str) -> int:
+        """Newest committed version in the table's ``_delta_log`` (-1 when
+        the log is empty)."""
+        from roapi_spark.sources.delta import _log_versions
+
+        return max(
+            (v for v, _ in _log_versions(os.path.join(path, "_delta_log"))),
+            default=-1,
+        )
 
     @staticmethod
     def _resolved_fmt(ts: TableSource) -> str:
@@ -700,18 +712,13 @@ class Catalog:
             else:
                 keep = n
         from roapi_spark.sinks.delta import vacuum
-        from roapi_spark.sources.delta import _log_versions
 
         deleted = vacuum(path, keep_versions=keep)
         # re-bind ONLY if the table advanced since this catalog bound it
         # (our own DML — flagged stale — or an external writer):
         # otherwise the bound view references head files vacuum never
         # touches, and a reload would buy a full log replay for nothing
-        head = max(
-            (v for v, _ in _log_versions(os.path.join(path, "_delta_log"))),
-            default=-1,
-        )
-        if head != self._bound_delta_head.get(name):
+        if self._delta_head(path) != self._bound_delta_head.get(name):
             self.load_table(self.sources[name])
             self._stale_dml_views.discard(name)
         return self.spark.createDataFrame(
@@ -1181,23 +1188,7 @@ class Catalog:
         ts = self.sources.get(name)
         if ts is None:
             raise CatalogError(f"table not found: {name}")
-        head = None
-        if self._resolved_fmt(ts) == "delta":
-            from roapi_spark.sources.delta import _log_versions
-
-            # pre-load listing, same reasoning as load_table: recorded
-            # head <= the rebound snapshot, so VACUUM's comparison can
-            # only over-rebind, never skip a required one
-            head = max(
-                (v for v, _ in _log_versions(
-                    os.path.join(ts.uri, "_delta_log"))),
-                default=-1,
-            )
-        df = _load(self.spark, self._stage_source(ts))
-        with self._lock:
-            self._bind(ts, df)
-            if head is not None:
-                self._bound_delta_head[name] = head
+        self._load_and_bind(ts, register=False)
 
     def start_refresh_loop(self, poll_interval: float = 1.0) -> None:
         """Background drain loop (startup.rs:75-82's 1 s cadence): any table

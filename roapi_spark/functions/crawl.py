@@ -42,13 +42,13 @@ from roapi_spark.functions.fixtures import (
     warc_shards,
 )
 from roapi_spark.functions.web import (
-    _robots_regex,
     canonical_url,
     parse_robots,
     registrable_domain,
     registrable_domain_sql,
     robots_allowed_col,
     robots_allowed_sql,
+    robots_regex,
     url_host,
 )
 from roapi_spark.plans.registry import register
@@ -1720,7 +1720,7 @@ def _policies_df(spark: SparkSession) -> DataFrame:
     pol_rows = [
         (
             dom,
-            [(allow, _robots_regex(p), len(p)) for allow, p in rules],
+            [(allow, robots_regex(p), len(p)) for allow, p in rules],
         )
         for dom, rules in _PARSED_POLICIES.items()
     ]

@@ -462,16 +462,16 @@ def emb_pairs_cid_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_cache_dir,
     )
 
-    from roapi_spark.functions.similarity import _IVF_LAYOUT_VERSION
+    from roapi_spark.functions.similarity import IVF_LAYOUT_VERSION
 
     layout_dir, _ = ivf_layout(spark, sf_dir)
     src = os.path.join(sf_dir, "embeddings.parquet")
     # the edge set is a function of the LAYOUT's clustering, not just the
     # source snapshot: the tag carries the layout version so a k-means/
-    # assignment change (an _IVF_LAYOUT_VERSION bump) invalidates the
+    # assignment change (an IVF_LAYOUT_VERSION bump) invalidates the
     # pair artifact too — otherwise stale v(n-1) edges would silently
     # serve against v(n) cells
-    out = snapshot_cache_dir(src, f"embpairscid-{_IVF_LAYOUT_VERSION}")
+    out = snapshot_cache_dir(src, f"embpairscid-{IVF_LAYOUT_VERSION}")
     build_once(
         out,
         parquet_ready,

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from roapi_spark.functions.similarity import N_QUERIES, TOP_K, _vq_col, emb
+from roapi_spark.functions.similarity import N_QUERIES, TOP_K, emb, vq_col
 from roapi_spark.plans.registry import register
 
 PQ_M = 4        # subspaces
@@ -71,7 +71,7 @@ def _prepared(spark: SparkSession, sf_dir: str) -> DataFrame:
     #1 — measured 75 s -> seconds here)."""
     return (
         emb(spark, sf_dir)
-        .withColumn("vq", _vq_col())
+        .withColumn("vq", vq_col())
         .select(
             "vec_id", "vq",
             *[_sub(F.col("vq"), m).alias(f"s{m}") for m in range(PQ_M)],
@@ -247,7 +247,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     qrows = (
         emb(spark, sf_dir)
         .filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("vq", _vq_col())
+        .withColumn("vq", vq_col())
         .select("vec_id", "vq")
         .collect()
     )
@@ -371,12 +371,12 @@ def _ivfpq_scored(spark: SparkSession, sf_dir: str):
     ivf_dir, cents = ivf_layout(spark, sf_dir)
     pq_dir, books = pq_layout(spark, sf_dir)
     # quantize the queries against the persisted coarse centroids
-    # (client-side: same integer math as the layout's _assign_expr,
+    # (client-side: same integer math as the layout's assign_expr,
     # without its per-call driver analysis cost)
     qrows = (
         emb(spark, sf_dir)
         .filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("vq", _vq_col())
+        .withColumn("vq", vq_col())
         .select("vec_id", "vq")
         .collect()
     )
@@ -473,7 +473,7 @@ def ann_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     nvq = (
         spark.read.parquet(ivf_dir)
         .filter(F.col("cid").isin(probe_cids))
-        .withColumn("nvq", _vq_col())
+        .withColumn("nvq", vq_col())
         .select(F.col("vec_id").alias("neighbor_id"), "nvq")
     )
     qdf = spark.createDataFrame(
@@ -573,7 +573,7 @@ def sq8_layout(spark: SparkSession, sf_dir: str) -> str:
     out = snapshot_cache_dir(src, "sq8-v1")
     if parquet_ready(out):
         return out
-    e = emb(spark, sf_dir).withColumn("vq", _vq_col())
+    e = emb(spark, sf_dir).withColumn("vq", vq_col())
     mm = (
         e.select(F.posexplode("vq").alias("i", "x"))
         .groupBy("i")

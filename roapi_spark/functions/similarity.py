@@ -318,7 +318,7 @@ def _lsh_bucket_serve(
     qrows = (
         emb(spark, sf_dir)
         .filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("vq", _vq_col())
+        .withColumn("vq", vq_col())
         .select("vec_id", "v", "vq")
         .collect()
     )
@@ -416,7 +416,7 @@ def lsh_layout(spark: SparkSession, sf_dir: str) -> str:
         planes = _lsh_planes()
         sigs = (
             emb(spark, sf_dir)
-            .withColumn("vq", _vq_col())
+            .withColumn("vq", vq_col())
             .withColumn("bucket", _lsh_sig_expr(planes).cast("bigint"))
             .drop("vq")
         )
@@ -506,7 +506,7 @@ def lsh_multi_layout(spark: SparkSession, sf_dir: str) -> str:
         fams = _lsh_planes_multi()
         sigs = (
             emb(spark, sf_dir)
-            .withColumn("vq", _vq_col())
+            .withColumn("vq", vq_col())
             .select(
                 "vec_id",
                 "v",
@@ -676,7 +676,7 @@ DIM = 64
 KM_SAMPLE_MOD = 4
 
 
-def _vq_col() -> Column:
+def vq_col() -> Column:
     # integer quantization (same grid as ann_lsh): every arithmetic step of
     # the k-means below is exact integer math, so Spark and the DuckDB
     # oracle produce bit-identical assignments
@@ -685,7 +685,7 @@ def _vq_col() -> Column:
 
 def assign_client(vq: list[int], cents: list[tuple[int, list[int]]]) -> int:
     """Exact-integer client-side coarse assignment for QUERY vectors:
-    the same (distance, cid) ordering as ``_assign_expr`` / the oracle's
+    the same (distance, cid) ordering as ``assign_expr`` / the oracle's
     ROW_NUMBER (full squared distance differs from the reduced form only
     by the per-vector constant ``||x||^2``). Query sets are bounded, and
     baking the k*dim literal tree into Catalyst costs ~1.5 s of driver
@@ -697,7 +697,7 @@ def assign_client(vq: list[int], cents: list[tuple[int, list[int]]]) -> int:
     )[1]
 
 
-def _assign_expr(cents: list[tuple[int, list[int]]]) -> Column:
+def assign_expr(cents: list[tuple[int, list[int]]]) -> Column:
     # argmin over (dist, cid) structs — array_min orders by dist then cid,
     # the same tie-break the oracle's ROW_NUMBER uses.  The scored distance
     # is the reduced form ||c||^2 - 2*x.c: the ||x||^2 term is constant per
@@ -796,14 +796,14 @@ def kmeans_fit(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[int]]]:
     returning the final (cid, centroid) list — k*dim ints on the driver."""
     # quantized corpus is read by 3+ jobs (init + per-iteration updates) —
     # materialize it once
-    eq = emb(spark, sf_dir).withColumn("vq", _vq_col()).localCheckpoint(eager=False)
+    eq = emb(spark, sf_dir).withColumn("vq", vq_col()).localCheckpoint(eager=False)
     cents = sorted(
         (r.vec_id, list(r.vq))
         for r in eq.filter(F.col("vec_id") < K_LISTS).select("vec_id", "vq").collect()
     )
     fit = eq.filter(F.col("vec_id") % KM_SAMPLE_MOD == 0)
     for _ in range(KM_ITERS):
-        assigned = fit.withColumn("cid", _assign_expr(cents))
+        assigned = fit.withColumn("cid", assign_expr(cents))
         upd = (
             assigned.select("cid", F.posexplode("vq").alias("i", "x"))
             .groupBy("cid", "i")
@@ -822,14 +822,14 @@ def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = kmeans_fit(spark, sf_dir)
     return (
         emb(spark, sf_dir)
-        .withColumn("vq", _vq_col())
-        .withColumn("cid", _assign_expr(cents))
+        .withColumn("vq", vq_col())
+        .withColumn("cid", assign_expr(cents))
         .drop("vq")
         .localCheckpoint(eager=False)
     )
 
 
-_IVF_LAYOUT_VERSION = "v3"  # v3: + per-cell sizes (_cells.json)
+IVF_LAYOUT_VERSION = "v3"  # v3: + per-cell sizes (_cells.json)
 
 
 def ivf_layout(
@@ -851,7 +851,7 @@ def ivf_layout(
     from roapi_spark.functions.snapshot import build_once, snapshot_cache_dir
 
     src = os.path.join(sf_dir, "embeddings.parquet")
-    out = snapshot_cache_dir(src, f"ivf-{_IVF_LAYOUT_VERSION}")
+    out = snapshot_cache_dir(src, f"ivf-{IVF_LAYOUT_VERSION}")
     cent_path = os.path.join(out, "_centroids.json")
 
     def _ready(d: str) -> bool:
@@ -865,8 +865,8 @@ def ivf_layout(
         cents = kmeans_fit(spark, sf_dir)
         assigned = (
             emb(spark, sf_dir)
-            .withColumn("vq", _vq_col())
-            .withColumn("cid", _assign_expr(cents))
+            .withColumn("vq", vq_col())
+            .withColumn("cid", assign_expr(cents))
             .drop("vq")
         )
         # one shuffle by cid, then each inverted list is a contiguous set
@@ -929,12 +929,12 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     qrows = (
         emb(spark, sf_dir)
         .filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("vq", _vq_col())
+        .withColumn("vq", vq_col())
         .select("vec_id", "v", "vq")
         .collect()
     )
     # client-side quantization (assign_client): identical integer math,
-    # none of _assign_expr's per-call driver analysis cost
+    # none of assign_expr's per-call driver analysis cost
     qass = [(r, assign_client([int(x) for x in r.vq], cents)) for r in qrows]
     q = spark.createDataFrame(
         [(int(r.vec_id), [float(x) for x in r.v], int(qcid)) for r, qcid in qass],
@@ -1085,7 +1085,7 @@ def ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     qrows = (
         emb(spark, sf_dir)
         .filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("vq", _vq_col())
+        .withColumn("vq", vq_col())
         .select("vec_id", "v", "vq")
         .collect()
     )

@@ -139,7 +139,7 @@ KNOWN_TAGS = (
     "lsh-v1",
     "lshmulti-v1",
     "embpairslbl-v1",
-    "embpairscid-v3",  # suffix tracks _IVF_LAYOUT_VERSION (edge set is a
+    "embpairscid-v3",  # suffix tracks IVF_LAYOUT_VERSION (edge set is a
     # function of the clustering, not just the source snapshot)
     "streambands-v1",
     "bm25-v1",

@@ -689,7 +689,7 @@ def robots_sitemaps(txt: str) -> list[str]:
     return out
 
 
-def _robots_regex(pattern: str) -> str:
+def robots_regex(pattern: str) -> str:
     """Anchored regex for a robots path pattern — kept to syntax both
     Java regex (Spark) and RE2 (DuckDB) accept identically."""
     import re as _re
@@ -706,7 +706,7 @@ def robots_allowed(path: str, rules: list[tuple[bool, str]]) -> bool:
 
     best_len, best_allow = -1, True
     for allow, pattern in rules:
-        if _re.match(_robots_regex(pattern), path):
+        if _re.match(robots_regex(pattern), path):
             plen = len(pattern)
             if plen > best_len or (plen == best_len and allow):
                 best_len, best_allow = plen, allow
@@ -719,7 +719,7 @@ def robots_allowed_col(path: Column, rules: list[tuple[bool, str]]) -> Column:
     allow >= disallow. Codegen'd; mirrored by robots_allowed_sql."""
     def side(want_allow: bool) -> Column:
         lens = [
-            F.when(path.rlike(_robots_regex(p)), F.lit(len(p))).otherwise(
+            F.when(path.rlike(robots_regex(p)), F.lit(len(p))).otherwise(
                 F.lit(-1)
             )
             for allow, p in rules
@@ -741,7 +741,7 @@ def robots_allowed_sql(path_expr: str, rules: list[tuple[bool, str]]) -> str:
         # into) the generated SQL literal
         lens = [
             f"(CASE WHEN regexp_matches({path_expr}, "
-            f"'{_robots_regex(p).replace(chr(39), chr(39) * 2)}') "
+            f"'{robots_regex(p).replace(chr(39), chr(39) * 2)}') "
             f"THEN {len(p)} ELSE -1 END)"
             for allow, p in rules
             if allow == want_allow

@@ -168,10 +168,10 @@ def emb_match_stream(
     to the batch ``emb_pairs_cid_cached`` artifact for vectors already
     in the corpus (pinned by the twin test)."""
     from roapi_spark.functions.similarity import (
-        _assign_expr,
-        _vq_col,
+        assign_expr,
         cosine_expr,
         ivf_layout,
+        vq_col,
     )
 
     layout_dir, cents = ivf_layout(spark, sf_dir)
@@ -182,8 +182,8 @@ def emb_match_stream(
     )
     s = (
         stream.select("vec_id", F.col("embedding").alias("v"))
-        .withColumn("vq", _vq_col())
-        .withColumn("cid", _assign_expr(cents))
+        .withColumn("vq", vq_col())
+        .withColumn("cid", assign_expr(cents))
         .select("vec_id", F.col("v").alias("sv"), "cid")
     )
     cos = F.round(cosine_expr("sv", "mv"), 4)

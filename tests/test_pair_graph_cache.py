@@ -222,13 +222,13 @@ def test_known_tags_cover_every_call_site():
             if lit:
                 used.add(lit.group(1))
             elif arg.startswith('f"ivf-'):
-                from roapi_spark.functions.similarity import _IVF_LAYOUT_VERSION
+                from roapi_spark.functions.similarity import IVF_LAYOUT_VERSION
 
-                used.add(f"ivf-{_IVF_LAYOUT_VERSION}")
+                used.add(f"ivf-{IVF_LAYOUT_VERSION}")
             elif arg.startswith('f"embpairscid-'):
-                from roapi_spark.functions.similarity import _IVF_LAYOUT_VERSION
+                from roapi_spark.functions.similarity import IVF_LAYOUT_VERSION
 
-                used.add(f"embpairscid-{_IVF_LAYOUT_VERSION}")
+                used.add(f"embpairscid-{IVF_LAYOUT_VERSION}")
             elif arg.startswith('f"spancov-') or arg.startswith('f"spanidx-'):
                 from roapi_spark.functions.dedup import REWRITE_K
 

@@ -86,7 +86,7 @@ def test_ivfpq_candidates_stay_in_coarse_cell(spark, cache_dir):
 
     from roapi_spark.functions.pq import ann_ivfpq
     from roapi_spark.functions.similarity import (
-        N_QUERIES, _assign_expr, _vq_col, emb, ivf_layout,
+        N_QUERIES, assign_expr, emb, ivf_layout, vq_col,
     )
 
     out = ann_ivfpq(spark, SF).collect()
@@ -95,8 +95,8 @@ def test_ivfpq_candidates_stay_in_coarse_cell(spark, cache_dir):
     cid = {
         int(r.vec_id): int(r.cid)
         for r in emb(spark, SF)
-        .withColumn("vq", _vq_col())
-        .withColumn("cid", _assign_expr(cents))
+        .withColumn("vq", vq_col())
+        .withColumn("cid", assign_expr(cents))
         .select("vec_id", "cid")
         .collect()
     }
@@ -110,13 +110,13 @@ def test_ivfpq_rerank_subset_and_exact_order(spark):
     (b) be ordered by EXACT integer L2 (verified independently against
     the quantized vectors), and (c) never pair a query with itself."""
     from roapi_spark.functions.pq import RERANK_C, ann_ivfpq_rerank, _ivfpq_scored
-    from roapi_spark.functions.similarity import _vq_col, emb
+    from roapi_spark.functions.similarity import vq_col, emb
 
     out = ann_ivfpq_rerank(spark, SF).collect()
     assert out
     vq = {
         int(r.vec_id): [int(x) for x in r.vq]
-        for r in emb(spark, SF).withColumn("vq", _vq_col()).select("vec_id", "vq").collect()
+        for r in emb(spark, SF).withColumn("vq", vq_col()).select("vec_id", "vq").collect()
     }
     scored, _, _, _ = _ivfpq_scored(spark, SF)
     pool = {(r.qid, r.neighbor_id) for r in scored.collect()}

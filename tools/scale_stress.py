@@ -365,7 +365,7 @@ def main() -> None:
             {similarity.assign_client([int(x) for x in r.vq], cents)
              for r in similarity.emb(spark, sf_dir)
              .filter(F.col("vec_id") < similarity.N_QUERIES)
-             .withColumn("vq", similarity._vq_col())
+             .withColumn("vq", similarity.vq_col())
              .select("vq").collect()}
         )
         row["ivf_probed_rows"] = (
