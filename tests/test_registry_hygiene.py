@@ -5,8 +5,11 @@ registration that skips any of them a test failure, not a silent gap."""
 
 from __future__ import annotations
 
+import json
 import os
 import re
+import subprocess
+import sys
 
 from roapi_spark.plans.registry import load_all
 
@@ -39,13 +42,59 @@ def test_every_query_has_a_plans_md_section():
     assert not stale, f"PLANS.md sections for unregistered queries: {stale}"
 
 
-def test_bench_headline_names_are_registered():
+def test_bench_stdout_line_fits_the_tail_budget():
+    """The driver reads bench.py's one stdout line from a ~2 KB tail
+    capture and compares its ``queries`` map across runs: the line must
+    fit the budget and carry the most expensive queries, with no field
+    from the retired series."""
     import bench
 
-    specs = load_all()
-    unknown = [n for n in bench.BENCH_QUERIES if n not in specs]
-    assert not unknown, f"bench headline names not in registry: {unknown}"
-    assert bench._POST61 <= set(bench.BENCH_QUERIES)
+    with open(os.path.join(REPO, "BENCH_DETAIL.json")) as f:
+        timings = json.load(f)["queries"]
+    assert sorted(timings) == sorted(load_all())
+    line = bench.stdout_line(timings, 0.1, 0)
+    assert len(line) <= bench.LINE_BUDGET
+    obj = json.loads(line)
+    secs = list(obj["queries"].values())
+    assert secs and secs == sorted(secs, reverse=True)
+    assert len(secs) >= 40
+    assert obj["n_queries"] == len(timings)
+    retired = [k for k in obj if k in ("per_query", "families") or k.startswith("subset61")]
+    assert not retired, retired
+
+
+def test_bench_rejects_unknown_query_before_spark():
+    """A misspelt name fails fast: exit 2 before any SparkSession starts.
+    JAVA_HOME points nowhere, so starting Spark would fail differently."""
+    env = dict(os.environ, JAVA_HOME=os.path.join(REPO, "no-such-jvm"))
+    res = subprocess.run(
+        [sys.executable, os.path.join(REPO, "bench.py"), "no_such_query"],
+        capture_output=True, text=True, timeout=300, env=env,
+    )
+    assert res.returncode == 2, res.stderr[-2000:]
+    assert "unknown queries: ['no_such_query']" in res.stderr
+
+
+def test_correctness_stamp_marks_a_dirty_tree(tmp_path):
+    """CORRECTNESS_LOCAL.json's ``_meta.commit`` must not pass off a run
+    over uncommitted changes as the parent commit."""
+    sys.path.insert(0, os.path.join(REPO, "tools"))
+    from check_correctness import commit_stamp
+
+    def git(*args):
+        return subprocess.run(
+            ["git", "-C", str(tmp_path), *args], check=True, capture_output=True, text=True
+        ).stdout.strip()
+
+    git("init", "-q")
+    (tmp_path / "f.txt").write_text("a\n")
+    git("add", "f.txt")
+    git("-c", "user.name=t", "-c", "user.email=t@t", "commit", "-q", "-m", "c")
+    head = git("rev-parse", "--short", "HEAD")
+    assert commit_stamp(str(tmp_path)) == head
+    (tmp_path / "f.txt").write_text("b\n")
+    assert commit_stamp(str(tmp_path)) == head + "-dirty"
+    assert commit_stamp(str(tmp_path / "not-a-repo")) == "unknown"
 
 
 def test_every_query_documented_and_tagged():
@@ -86,20 +135,6 @@ def test_duplicate_registration_fails_loud():
 
     redo()
     assert QUERIES["q1_pricing_summary"].builder is fn
-
-
-def test_bench_historical_subset_is_exactly_61():
-    """subset61_sec's value series is only comparable across rounds if
-    the underlying query set NEVER changes: every new headline query
-    must also be added to _POST61, or it silently joins (and breaks)
-    the historical series."""
-    import bench
-
-    hist = [n for n in bench.BENCH_QUERIES if n not in bench._POST61]
-    assert len(hist) == 61, (
-        f"historical bench subset changed size ({len(hist)}): new "
-        "headline queries must be added to bench._POST61"
-    )
 
 
 def test_no_unpartitioned_windows_in_package_source():

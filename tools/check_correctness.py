@@ -27,6 +27,24 @@ from roapi_spark.session import get_spark
 from roapi_spark.testing.oracle import CompareResult, compare, duckdb_conn
 
 
+def commit_stamp(repo: str = ".") -> str:
+    """Short HEAD hash of ``repo``, suffixed ``-dirty`` when ``git status
+    --porcelain`` lists any change, so a run over an uncommitted tree is
+    never stamped with its parent's hash; ``"unknown"`` when git fails."""
+
+    def git(*args: str) -> str:
+        return subprocess.run(
+            ["git", "-C", repo, *args],
+            capture_output=True, text=True, timeout=10, check=True,
+        ).stdout.strip()
+
+    try:
+        head = git("rev-parse", "--short", "HEAD")
+        return head + "-dirty" if git("status", "--porcelain") else head
+    except Exception:  # noqa: BLE001 — stamp is best-effort
+        return "unknown"
+
+
 def main() -> int:
     args = sys.argv[1:]
     json_path = None
@@ -72,18 +90,11 @@ def main() -> int:
     print(f"\n{'OK' if failures == 0 else 'FAILURES: %d' % failures}")
 
     if json_path:
-        try:
-            commit = subprocess.run(
-                ["git", "rev-parse", "--short", "HEAD"],
-                capture_output=True, text=True, timeout=10,
-            ).stdout.strip()
-        except Exception:  # noqa: BLE001 — stamp is best-effort
-            commit = "unknown"
         out = dict(records)
         out["_meta"] = {
             "generated_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "sf_dir": sf_dir,
-            "commit": commit,
+            "commit": commit_stamp(),
             "queries": len(records),
             "failures": failures,
         }

@@ -1,4 +1,4 @@
-"""Write docs/PLANS.md: the physical plan for every bench query, plus a
+"""Write docs/PLANS.md: the physical plan for every registered query, plus a
 one-line shape summary (join strategies / exchanges / scans), so plan
 shapes can be reviewed without running Spark.
 
@@ -15,7 +15,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import BENCH_QUERIES  # noqa: E402
 from roapi_spark.plans.registry import load_all  # noqa: E402
 from roapi_spark.session import get_spark  # noqa: E402
 
@@ -40,12 +39,11 @@ def main() -> None:
     out = [
         "# Physical plans (generated by tools/dump_plans.py — do not edit)",
         "",
-        f"Source data: `{sf_dir}`. One section per bench query; the summary",
+        f"Source data: `{sf_dir}`. One section per registered query; the summary",
         "line counts the plan's join strategies, exchanges and scans.",
         "",
     ]
-    names = BENCH_QUERIES + sorted(n for n in specs if n not in set(BENCH_QUERIES))
-    for name in names:
+    for name in sorted(specs):
         df = specs[name].builder(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         out.append(f"## {name}")
