@@ -45,8 +45,8 @@ def test_every_query_has_a_plans_md_section():
 def test_bench_stdout_line_fits_the_tail_budget():
     """The driver reads bench.py's one stdout line from a ~2 KB tail
     capture and compares its ``queries`` map across runs: the line must
-    fit the budget and carry the most expensive queries, with no field
-    from the retired series."""
+    fit the budget, carry the most expensive queries and hold only the
+    contract's fields."""
     import bench
 
     with open(os.path.join(REPO, "BENCH_DETAIL.json")) as f:
@@ -59,8 +59,10 @@ def test_bench_stdout_line_fits_the_tail_budget():
     assert secs and secs == sorted(secs, reverse=True)
     assert len(secs) >= 40
     assert obj["n_queries"] == len(timings)
-    retired = [k for k in obj if k in ("per_query", "families") or k.startswith("subset61")]
-    assert not retired, retired
+    # exactly the contract's fields: none of the retired series' keys
+    assert set(obj) == {
+        "metric", "value", "unit", "sf", "sink", "n_queries", "n_regressions", "queries"
+    }
 
 
 def test_bench_rejects_unknown_query_before_spark():
