@@ -41,11 +41,9 @@ REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 DETAIL_PATH = os.path.join(REPO_DIR, "BENCH_DETAIL.json")
 
 
-def stdout_line(
-    timings: dict[str, float], sf: float, n_regressions: int, budget: int = LINE_BUDGET
-) -> str:
+def stdout_line(timings: dict[str, float], sf: float, n_regressions: int) -> str:
     """The one stdout line: the headline fields plus as many per-query
-    timings as fit in ``budget`` chars, most expensive first. Ties break
+    timings as fit in LINE_BUDGET chars, most expensive first. Ties break
     by name, so runs at different core counts ship near-identical sets;
     every figure still lands in BENCH_DETAIL.json."""
     obj = {
@@ -60,7 +58,7 @@ def stdout_line(
     }
     for n in sorted(timings, key=lambda n: (-timings[n], n)):
         obj["queries"][n] = round(timings[n], 2)
-        if len(json.dumps(obj)) > budget:
+        if len(json.dumps(obj)) > LINE_BUDGET:
             del obj["queries"][n]
             break
     return json.dumps(obj)
