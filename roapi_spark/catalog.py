@@ -33,6 +33,57 @@ from roapi_spark.query.rest import rest_query_to_df
 from roapi_spark.sources import load_table as _load
 
 
+# Where Spark SQL text is not code: quoted spans and comments. Strings
+# take backslash escapes ('it\'s'; a doubled '' lexes as two adjacent
+# spans, which masks the same), r'…' raw strings take none (the raw
+# test is a lookbehind from the quote, so plain code pays nothing for
+# it), and an unterminated span runs to the end. The one group of each
+# quoted alternative is its closing quote. Spark nests /* */ comments;
+# this scan ends one at its first */.
+_SPAN_RE = re.compile(
+    r"""'(?<=[rR]')(?<!\w[rR]')[^']*(')?|"(?<=[rR]")(?<!\w[rR]")[^"]*(")?"""
+    r"""|'[^'\\]*(?:\\.[^'\\]*)*(')?"""
+    r'''|"[^"\\]*(?:\\.[^"\\]*)*(")?'''
+    r"|`[^`]*(`)?"
+    r"|--[^\n]*|/\*.*?(?:\*/|\Z)",
+    re.S,
+)
+
+
+def _blank_span(m: re.Match) -> str:
+    s = m.group()
+    if s[0] in "-/":  # a comment goes whole
+        return " " * len(s)
+    tail = 1 if m.lastindex else 0
+    return s[0] + " " * (len(s) - 1 - tail) + s[len(s) - tail :]
+
+
+def mask_literals(sql: str) -> str:
+    """Same-length copy of ``sql`` with the contents of '…', "…" and
+    `…` spans and whole ``--``/``/* */`` comments blanked to spaces.
+    Quote delimiters stay, so patterns can still anchor on them, and
+    every position maps 1:1 onto ``sql``: a scan for keywords, ``?``,
+    ``;`` or ``$n`` runs on the mask and never fires inside a literal.
+    This is the one place that decides where a literal or comment
+    starts and ends."""
+    return _SPAN_RE.sub(_blank_span, sql)
+
+
+def sub_outside_literals(pattern: re.Pattern, repl, sql: str) -> str:
+    """``pattern.sub(repl, sql)`` over code only: each match is found on
+    the mask and re-matched on ``sql``, so its groups carry the real
+    quoted contents."""
+    out: list[str] = []
+    last = 0
+    for mm in pattern.finditer(mask_literals(sql)):
+        m = pattern.match(sql, mm.start())
+        if m is None or m.start() < last:
+            continue
+        out += (sql[last : m.start()], repl(m))
+        last = m.end()
+    return "".join(out) + sql[last:]
+
+
 class CatalogError(RuntimeError):
     pass
 
@@ -250,7 +301,7 @@ class Catalog:
         the check must run on the *parsed* plan, before execution.
         """
         try:
-            plan = self.spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
+            plan = self._parse_plan(sql)
         except Exception:
             return  # let spark.sql raise its own (nicer) parse error
         jvm = self.spark.sparkContext._jvm
@@ -280,48 +331,6 @@ class Catalog:
                     walk(it.next())
 
         walk(plan)
-
-    @staticmethod
-    def _mask_literals(sql: str) -> str:
-        """Same-length copy of ``sql`` with the CONTENTS of quoted spans
-        ('…', "…", `…`; doubling handled) and comments (-- …, /* … */)
-        blanked to spaces — keyword/regex scans run on the mask (so a
-        literal like 'see VERSION AS OF 2' never fires a rewrite) while
-        every match position maps 1:1 back onto the original text."""
-        out = list(sql)
-        i, n = 0, len(sql)
-        while i < n:
-            ch = sql[i]
-            if ch in ("'", '"', "`"):
-                q = ch
-                i += 1
-                while i < n:
-                    if sql[i] == q:
-                        if i + 1 < n and sql[i + 1] == q:  # doubled quote
-                            out[i] = out[i + 1] = " "
-                            i += 2
-                            continue
-                        break
-                    out[i] = " "
-                    i += 1
-                i += 1  # past the closing quote (or EOF)
-            elif ch == "-" and i + 1 < n and sql[i + 1] == "-":
-                while i < n and sql[i] != "\n":
-                    out[i] = " "
-                    i += 1
-            elif ch == "/" and i + 1 < n and sql[i + 1] == "*":
-                out[i] = out[i + 1] = " "
-                i += 2
-                while i < n:
-                    if sql[i] == "*" and i + 1 < n and sql[i + 1] == "/":
-                        out[i] = out[i + 1] = " "
-                        i += 2
-                        break
-                    out[i] = " "
-                    i += 1
-            else:
-                i += 1
-        return "".join(out)
 
     # information_schema surface (DataFusion exposes it natively —
     # columnq/src/query/sql.rs session config enables it; Spark has no such
@@ -726,7 +735,30 @@ class Catalog:
             "operation string, table string, files_deleted bigint",
         )
 
-    def _route_dml(self, sql: str) -> DataFrame | None:
+    def _parse_plan(self, sql: str, args: list | dict | None = None):
+        """Spark's parsed plan of ``sql``; ``args`` bind to literals the
+        way ``spark.sql(sql, args=args)`` binds them (Spark >= 4.1)."""
+        jvm, jss = self.spark._jvm, self.spark._jsparkSession
+        parser = jss.sessionState().sqlParser()
+        if not args:
+            return parser.parsePlan(sql)
+        from pyspark.sql import functions as F
+
+        def expr(v):
+            return jss.expression(F.lit(v)._jc)
+
+        ctx_pkg = jvm.org.apache.spark.sql.catalyst.parser
+        if isinstance(args, dict):
+            ctx = ctx_pkg.NamedParameterContext(
+                jvm.PythonUtils.toScalaMap({k: expr(v) for k, v in args.items()})
+            )
+        else:
+            ctx = ctx_pkg.PositionalParameterContext(
+                jvm.PythonUtils.toSeq([expr(v) for v in args])
+            )
+        return parser.parsePlanWithParameters(sql, ctx)
+
+    def _route_dml(self, sql: str, args: list | dict | None = None) -> DataFrame | None:
         """Returns a 1-row summary DF for DELETE/UPDATE/MERGE statements
         on delta tables, or None when ``sql`` is not DML."""
         from roapi_spark.sinks.delta import (
@@ -736,7 +768,7 @@ class Catalog:
         )
 
         try:
-            plan = self.spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
+            plan = self._parse_plan(sql, args)
         except Exception:
             return None  # let spark.sql raise its own parse error
         kind = plan.getClass().getSimpleName()
@@ -991,8 +1023,7 @@ class Catalog:
         # scan the literal-masked text (a keyword inside a string value
         # must not fire), re-matching each hit on the ORIGINAL so the
         # captured tokens carry the real quoted content
-        masked = self._mask_literals(sql)
-        for mm in self._TT_KEY_RE.finditer(masked):
+        for mm in self._TT_KEY_RE.finditer(mask_literals(sql)):
             m = self._TT_KEY_RE.match(sql, mm.start())
             if m is None:
                 continue
@@ -1087,26 +1118,14 @@ class Catalog:
             )
             return view
 
-        # scan the literal-masked text so a table_changes(...) snippet
-        # inside a string value is never rewritten; re-match each hit
-        # on the original for the real quoted arguments
-        masked = self._mask_literals(sql)
-        out: list[str] = []
-        last = 0
-        for mm in self._CDF_RE.finditer(masked):
-            m = self._CDF_RE.match(sql, mm.start())
-            if m is None or m.start() < last:
-                continue
-            out.append(sql[last : m.start()])
-            out.append(repl(m))
-            last = m.end()
-        out.append(sql[last:])
-        return "".join(out)
+        # a table_changes(...) snippet inside a string value is never
+        # rewritten
+        return sub_outside_literals(self._CDF_RE, repl, sql)
 
-    def query_sql(self, sql: str, args: list | None = None) -> DataFrame:
-        """``args`` are positional parameters for ``?`` placeholders,
-        bound by Spark's native parameterized-SQL support (values never
-        pasted into the SQL text — no quoting/injection concerns)."""
+    def query_sql(self, sql: str, args: list | dict | None = None) -> DataFrame:
+        """``args`` bind ``?`` markers (a list) or ``:name`` markers (a
+        dict) through Spark's native parameterized SQL: a value is never
+        pasted into the SQL text, so no quoting or injection concerns."""
         meta_df = self._route_history(sql)  # read-only-safe: log metadata
         if meta_df is None:
             meta_df = self._route_detail(sql)
@@ -1123,29 +1142,25 @@ class Catalog:
         else:
             routed = self._route_maintenance(sql)
             if routed is None:
-                routed = self._route_dml(sql)
+                routed = self._route_dml(sql, args)
             if routed is not None:
                 return routed
         if self._stale_dml_views:
             self._flush_stale_views()
-        masked = self._mask_literals(sql)
+        masked = mask_literals(sql)
         if self._TT_KEY_RE.search(masked):
             sql = self._rewrite_time_travel(sql)
-            masked = self._mask_literals(sql)
+            masked = mask_literals(sql)
         if self._CDF_RE.search(masked):
             sql = self._rewrite_table_changes(sql)
-            masked = self._mask_literals(sql)
+            masked = mask_literals(sql)
         if self._INFO_SCHEMA_RE.search(masked):
             self._materialize_information_schema()
-            # rewrite only OUTSIDE literals (mask positions map 1:1)
-            out: list[str] = []
-            last = 0
-            for m in self._INFO_SCHEMA_RE.finditer(masked):
-                out.append(sql[last : m.start()])
-                out.append(f"information_schema_{m.group(1).lower()}")
-                last = m.end()
-            out.append(sql[last:])
-            sql = "".join(out)
+            sql = sub_outside_literals(
+                self._INFO_SCHEMA_RE,
+                lambda m: f"information_schema_{m.group(1).lower()}",
+                sql,
+            )
         if args:
             return self.spark.sql(sql, args=args)
         return self.spark.sql(sql)

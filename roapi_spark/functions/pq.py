@@ -25,7 +25,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from roapi_spark.functions.similarity import N_QUERIES, TOP_K, emb, vq_col
+from roapi_spark.functions.similarity import (
+    N_QUERIES,
+    TOP_K,
+    ann_recall_pair,
+    emb,
+    recall_oracle,
+    vq_col,
+)
 from roapi_spark.plans.registry import register
 
 PQ_M = 4        # subspaces
@@ -289,6 +296,20 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register(
+    "q_pq_recall",
+    oracle=recall_oracle("ann_pq_adc"),
+    doc="Recall@5 of the product-quantized ADC search against the exact "
+    "brute-force top-5 — the measured quantization loss of the ~256x "
+    "code compression (the number that justifies, or indicts, M and K "
+    "for a corpus). Same N_QUERIES-bounded overlap join as the other "
+    "recall audits.",
+    tags=("similarity", "audit"),
+)
+def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return ann_recall_pair(spark, sf_dir, ann_pq_adc(spark, sf_dir))
+
+
 def _ivfpq_cte_body() -> str:
     """Shared WITH-body through ``ranked`` (ADC-ordered candidates of the
     query's coarse cell): IVF coarse filter (unrolled k-means,
@@ -503,6 +524,21 @@ def ann_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("rnk").cast("bigint").alias("rnk"),
         )
     )
+
+
+@register(
+    "q_pq_rerank_recall",
+    oracle=recall_oracle("ann_ivfpq_rerank"),
+    doc="Recall@5 of IVF-PQ WITH exact re-ranking — the after picture to "
+    "q_pq_recall's raw ADC number: the refine stage re-scores a "
+    "constant-size shortlist with exact distances, recovering the "
+    "accuracy the code compression threw away at O(C) extra work per "
+    "query. Paired with q_pq_recall this is the measured value of the "
+    "refine knob. Same N_QUERIES-bounded overlap join.",
+    tags=("similarity", "audit"),
+)
+def q_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return ann_recall_pair(spark, sf_dir, ann_ivfpq_rerank(spark, sf_dir))
 
 
 # -- SQ8 scalar quantization ------------------------------------------------

@@ -15,8 +15,9 @@ recall audits, and lexical retrieval.
   bucketed candidate generation over integer-quantized vectors, so the
   projection signs are exact and the query has a full DuckDB oracle.
 
-- recall audits (``q_ann_recall``, ``q_lsh_recall``, ``q_pq_recall``
-  and their variants) score every ANN index against the exact baseline;
+- recall audits (``q_ann_recall``, ``q_lsh_recall`` and their variants;
+  the PQ ones sit next to their builders in ``pq.py``) score every ANN
+  index against the exact baseline;
   ``q_cluster_purity`` and ``q_embedding_dim_stats`` audit the quantizer
   and the embedding columns.
 - lexical retrieval: the inverted index, TF-IDF key terms and BM25
@@ -35,7 +36,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from roapi_spark.functions.text import TOKENS_DUCK, docs, tokens_col
-from roapi_spark.plans.registry import register
+from roapi_spark.plans.registry import QUERIES, register
 from roapi_spark.plans.util import maybe_broadcast
 from roapi_spark.util import pround, serve_persist
 
@@ -1277,18 +1278,13 @@ def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- ANN recall audit --------------------------------------------------------
 
 
-def _recall_oracle(query_name: str) -> str:
+def recall_oracle(query_name: str) -> str:
     """Compose any registered approximate-search query's oracle with the
     exact brute-force oracle as nested CTEs (DuckDB allows a WITH inside
     a CTE body) into ONE recall@TOP_K audit — the single source of the
-    overlap/rounding recipe for every per-family recall query. Imports
-    the registering modules directly (their @register calls populate
-    QUERIES) instead of load_all(), which would re-enter the registry's
-    import chain mid-import."""
-    import roapi_spark.functions.pq  # noqa: F401
-    import roapi_spark.functions.similarity  # noqa: F401
-    from roapi_spark.plans.registry import QUERIES
-
+    overlap/rounding recipe for every per-family recall query. Call it
+    after ``query_name`` has registered (each audit sits below its
+    builder)."""
     approx = QUERIES[query_name].oracle
     exact = QUERIES["knn_bruteforce"].oracle
     return f"""
@@ -1306,7 +1302,7 @@ def _recall_oracle(query_name: str) -> str:
     """
 
 
-def _ann_recall_pair(spark, sf_dir, ann_df):
+def ann_recall_pair(spark, sf_dir, ann_df):
 
     # the exact top-5 feeds BOTH the overlap join and the query-set
     # distinct: persist the (N_QUERIES x TOP_K)-row result so the
@@ -1332,7 +1328,7 @@ def _ann_recall_pair(spark, sf_dir, ann_df):
 
 @register(
     "q_ann_recall",
-    oracle=_recall_oracle("ann_ivf_kmeans"),
+    oracle=recall_oracle("ann_ivf_kmeans"),
     doc="ANN recall audit: recall@5 of the IVF-k-means search against "
     "the exact brute-force top-5 — THE number an ANN deployment tunes "
     "nprobe/list-count by. Composes the two registered operators (IVF "
@@ -1341,12 +1337,12 @@ def _ann_recall_pair(spark, sf_dir, ann_df):
     tags=("similarity", "audit"),
 )
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ann_recall_pair(spark, sf_dir, ann_ivf_kmeans(spark, sf_dir))
+    return ann_recall_pair(spark, sf_dir, ann_ivf_kmeans(spark, sf_dir))
 
 
 @register(
     "q_ann_recall_nprobe",
-    oracle=_recall_oracle("ann_ivf_nprobe"),
+    oracle=recall_oracle("ann_ivf_nprobe"),
     doc="Recall@5 of the multi-probe IVF variant — paired with "
     "q_ann_recall (single probe) this is the nprobe dial measured: more "
     "probed lists, higher recall, more rows scanned (the ivf_probed_rows "
@@ -1354,12 +1350,12 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "audit"),
 )
 def q_ann_recall_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ann_recall_pair(spark, sf_dir, ann_ivf_nprobe(spark, sf_dir))
+    return ann_recall_pair(spark, sf_dir, ann_ivf_nprobe(spark, sf_dir))
 
 
 @register(
     "q_lsh_recall",
-    oracle=_recall_oracle("ann_lsh"),
+    oracle=recall_oracle("ann_lsh"),
     doc="Recall@5 of the hyperplane-LSH search against the exact "
     "brute-force top-5 — the quality axis for the hashing index family, "
     "completing the per-family audit trio (IVF: q_ann_recall/_nprobe; "
@@ -1369,45 +1365,12 @@ def q_ann_recall_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "audit"),
 )
 def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ann_recall_pair(spark, sf_dir, ann_lsh(spark, sf_dir))
-
-
-@register(
-    "q_pq_recall",
-    oracle=_recall_oracle("ann_pq_adc"),
-    doc="Recall@5 of the product-quantized ADC search against the exact "
-    "brute-force top-5 — the measured quantization loss of the ~256x "
-    "code compression (the number that justifies, or indicts, M and K "
-    "for a corpus). Same N_QUERIES-bounded overlap join as the other "
-    "recall audits.",
-    tags=("similarity", "audit"),
-)
-def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from roapi_spark.functions.pq import ann_pq_adc
-
-    return _ann_recall_pair(spark, sf_dir, ann_pq_adc(spark, sf_dir))
-
-
-@register(
-    "q_pq_rerank_recall",
-    oracle=_recall_oracle("ann_ivfpq_rerank"),
-    doc="Recall@5 of IVF-PQ WITH exact re-ranking — the after picture to "
-    "q_pq_recall's raw ADC number: the refine stage re-scores a "
-    "constant-size shortlist with exact distances, recovering the "
-    "accuracy the code compression threw away at O(C) extra work per "
-    "query. Paired with q_pq_recall this is the measured value of the "
-    "refine knob. Same N_QUERIES-bounded overlap join.",
-    tags=("similarity", "audit"),
-)
-def q_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from roapi_spark.functions.pq import ann_ivfpq_rerank
-
-    return _ann_recall_pair(spark, sf_dir, ann_ivfpq_rerank(spark, sf_dir))
+    return ann_recall_pair(spark, sf_dir, ann_lsh(spark, sf_dir))
 
 
 @register(
     "q_lsh_multi_recall",
-    oracle=_recall_oracle("ann_lsh_multi"),
+    oracle=recall_oracle("ann_lsh_multi"),
     doc="Recall@5 of the multi-table LSH search — the after picture to "
     "q_lsh_recall's single-table 0.00: L independent tables give each "
     "true neighbor L collision chances (1-(1-p^k)^L), the measured value "
@@ -1415,7 +1378,7 @@ def q_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "audit"),
 )
 def q_lsh_multi_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ann_recall_pair(spark, sf_dir, ann_lsh_multi(spark, sf_dir))
+    return ann_recall_pair(spark, sf_dir, ann_lsh_multi(spark, sf_dir))
 
 
 # BM25 constants (the standard Robertson/Lucene defaults)

@@ -44,7 +44,7 @@ import pyarrow as pa
 import pyarrow.flight as flight
 
 import roapi_spark
-from roapi_spark.catalog import Catalog
+from roapi_spark.catalog import Catalog, mask_literals
 from roapi_spark.server import flightsql_proto as fsp
 
 # arrow.flight.protocol.sql.SqlInfo ids (flight_sql.rs sql_info parity)
@@ -160,40 +160,6 @@ class _AuthMiddlewareFactory(flight.ServerMiddlewareFactory):
             if a.lower().startswith("basic ") and self._check_basic(a[6:]):
                 return _BearerResponder(self._token)
         raise flight.FlightUnauthenticatedError("invalid or missing credentials")
-
-
-def _count_placeholders(sql: str) -> int:
-    """Positional ``?`` markers outside single/double/backtick-quoted
-    literals (with backslash escapes and the '' doubled-quote form) and
-    outside ``--``-to-EOL and ``/* */`` comments."""
-    n, in_q, i = 0, "", 0
-    L = len(sql)
-    while i < L:
-        c = sql[i]
-        if in_q:
-            if c == "\\" and in_q in ("'", '"'):
-                i += 2  # Spark string literals support backslash escapes
-                continue
-            if c == in_q:
-                # doubled quote = escaped quote inside the same literal
-                if i + 1 < L and sql[i + 1] == in_q:
-                    i += 2
-                    continue
-                in_q = ""
-        elif c in ("'", '"', "`"):
-            in_q = c
-        elif c == "-" and sql[i : i + 2] == "--":
-            nl = sql.find("\n", i)
-            i = L if nl == -1 else nl
-            continue
-        elif c == "/" and sql[i : i + 2] == "/*":
-            end = sql.find("*/", i + 2)
-            i = L if end == -1 else end + 2
-            continue
-        elif c == "?":
-            n += 1
-        i += 1
-    return n
 
 
 class SparkFlightServer(flight.FlightServerBase):
@@ -352,25 +318,22 @@ class SparkFlightServer(flight.FlightServerBase):
 
     def _dispatch_command(self, command: bytes, descriptor) -> flight.FlightInfo:
         unpacked = fsp.any_unpack(command)
+        args = None
         if unpacked is None:  # bare SQL string (plain pyarrow.flight client)
-            table = self.catalog.query_sql(command.decode("utf-8")).toArrow()
-            return self._stash(table, descriptor)
-        cmd, payload = unpacked
-        if cmd == "CommandStatementQuery":
-            sql = fsp.decode_fields(payload)[1][0]
+            sql = command.decode("utf-8")
+        elif unpacked[0] == "CommandStatementQuery":
+            sql = fsp.decode_fields(unpacked[1])[1][0]
             sql = sql.decode() if isinstance(sql, bytes) else str(sql)
-            return self._stash(self.catalog.query_sql(sql).toArrow(), descriptor)
-        if cmd == "CommandPreparedStatementQuery":
-            handle = fsp.decode_fields(payload)[1][0]
+        elif unpacked[0] == "CommandPreparedStatementQuery":
+            handle = fsp.decode_fields(unpacked[1])[1][0]
             with self._lock:
                 sql = self._prepared.get(handle)
                 args = self._params.get(handle)
             if sql is None:
                 raise flight.FlightServerError("unknown prepared statement handle")
-            return self._stash(
-                self.catalog.query_sql(sql, args=args).toArrow(), descriptor
-            )
-        return self._stash(self._metadata_table(cmd, payload), descriptor)
+        else:
+            return self._stash(self._metadata_table(*unpacked), descriptor)
+        return self._stash(self.catalog.query_sql(sql, args=args).toArrow(), descriptor)
 
     def do_put(self, context, descriptor, reader, writer):
         """FlightSQL parameter binding (flight_sql.rs:781-796): the
@@ -440,11 +403,9 @@ class SparkFlightServer(flight.FlightServerBase):
 
     def list_flights(self, context, criteria):
         for name in self.catalog.table_names():
-            schema = self.catalog.table(name).schema
             arrow_schema = self.catalog.table(name).limit(0).toArrow().schema
             descriptor = flight.FlightDescriptor.for_path(name)
             yield flight.FlightInfo(arrow_schema, descriptor, [], -1, -1)
-            del schema
 
     def do_action(self, context, action):
         if action.type == "CreatePreparedStatement":
@@ -455,8 +416,8 @@ class SparkFlightServer(flight.FlightServerBase):
             sql = sql.decode() if isinstance(sql, bytes) else str(sql)
             # validate + capture the result schema without executing;
             # ?-parameterized statements analyze with NULLs bound ('?'
-            # counted outside string literals)
-            n_params = _count_placeholders(sql)
+            # counted outside literals and comments)
+            n_params = mask_literals(sql).count("?")
             schema = (
                 self.catalog.query_sql(sql, args=[None] * n_params or None)
                 .limit(0)

@@ -2,10 +2,11 @@
 roapi/src/server/postgres.rs, 543 LoC on the pgwire crate).
 
 Behavior parity:
-- simple query 'Q' with multi-statement split on ';'
-  (postgres.rs:360-395);
+- simple query 'Q' with a multi-statement split on the ';'s outside
+  literals and comments (postgres.rs:360-395);
 - extended-query protocol: Parse/Bind/Describe/Execute/Close/Flush/Sync
-  with $n parameter binding (text + common binary formats), portal row
+  with $n parameters (text + common binary formats) bound natively as
+  Spark named parameters, typed by their declared OID; portal row
   limits with PortalSuspended, and skip-until-Sync error recovery —
   parity with pgwire's ExtendedQueryHandler (postgres.rs:125-358);
 - ``SHOW``/``SET`` are accepted no-ops returning an empty result
@@ -26,6 +27,8 @@ misencoded row.
 
 from __future__ import annotations
 
+import decimal
+import re
 import socketserver
 import struct
 import threading
@@ -34,7 +37,7 @@ from datetime import date, datetime
 from pyspark.sql import Row
 from pyspark.sql import types as T
 
-from roapi_spark.catalog import Catalog
+from roapi_spark.catalog import Catalog, mask_literals, sub_outside_literals
 from roapi_spark.util import jsonable
 
 _SSL_REQUEST = 80877103
@@ -93,8 +96,6 @@ _PG_EPOCH_TS = datetime(2000, 1, 1)
 def _numeric_binary(dec) -> bytes:
     """pg `numeric` binary wire form: base-10000 digit groups with
     weight/sign/dscale header (public wire format)."""
-    import decimal
-
     if dec.is_nan():
         return struct.pack(">HhHH", 0, 0, 0xC000, 0)
     sign = 0x4000 if dec < 0 else 0x0000
@@ -121,8 +122,6 @@ def _render_binary(v: object, oid: int) -> bytes | None:
     """Binary-format rendering for the OIDs this server maps. Unmapped
     combinations raise — the caller turns that into an ErrorResponse
     instead of sending a row the driver would misparse."""
-    import decimal
-
     if v is None:
         return None
     if oid == 16:
@@ -166,7 +165,7 @@ def _cstr(s: str) -> bytes:
 
 
 _INT_OIDS = {20, 21, 23}
-_FLOAT_OIDS = {700, 701, 1700}
+_PG_PARAM_RE = re.compile(r"\$(\d+)")
 
 
 def _read_cstr(b: bytes) -> tuple[str, bytes]:
@@ -174,63 +173,57 @@ def _read_cstr(b: bytes) -> tuple[str, bytes]:
     return b[:i].decode("utf-8", "replace"), b[i + 1 :]
 
 
-def _param_literal(raw: bytes | None, oid: int, fmt: int) -> str:
-    """Render one bound parameter as a SQL literal."""
+def _param_value(raw: bytes | None, oid: int, fmt: int) -> object:
+    """One bound parameter as the Python value Spark binds natively; its
+    type follows the declared OID."""
     if raw is None:
-        return "NULL"
+        return None
     if fmt == 1:  # binary format (postgres.rs param decode parity)
-        if oid in (21, 23, 20) and len(raw) in (2, 4, 8):
-            return str(int.from_bytes(raw, "big", signed=True))
+        if oid in _INT_OIDS and len(raw) in (2, 4, 8):
+            return int.from_bytes(raw, "big", signed=True)
         if oid == 701 and len(raw) == 8:
-            return repr(struct.unpack(">d", raw)[0])
+            return struct.unpack(">d", raw)[0]
         if oid == 700 and len(raw) == 4:
-            return repr(struct.unpack(">f", raw)[0])
+            return struct.unpack(">f", raw)[0]
         if oid == 16 and len(raw) == 1:
-            return "TRUE" if raw[0] else "FALSE"
+            return bool(raw[0])
+        if oid == 17:
+            return bytes(raw)
         raise ValueError(f"unsupported binary parameter format for oid {oid}")
     s = raw.decode("utf-8", "replace")
     if oid in _INT_OIDS:
-        int(s)  # validate
-        return s
-    if oid in _FLOAT_OIDS:
-        float(s)
-        return s
+        return int(s)
+    if oid in (700, 701):
+        return float(s)
+    if oid == 1700:
+        return decimal.Decimal(s)
     if oid == 16:
-        return "TRUE" if s.lower() in ("t", "true", "1", "on", "yes") else "FALSE"
-    return "'" + s.replace("'", "''") + "'"
+        return s.lower() in ("t", "true", "1", "on", "yes")
+    if oid == 17:  # bytea text form is \x-prefixed hex
+        return bytes.fromhex(s[2:]) if s.startswith("\\x") else bytes(raw)
+    return s
 
 
-def _substitute_params(sql: str, literals: list[str]) -> str:
-    """Replace $1..$n outside single-quoted spans."""
-    out: list[str] = []
-    i, n = 0, len(sql)
-    in_quote = False
-    while i < n:
-        ch = sql[i]
-        if in_quote:
-            out.append(ch)
-            if ch == "'":
-                if i + 1 < n and sql[i + 1] == "'":
-                    out.append("'")
-                    i += 1
-                else:
-                    in_quote = False
-        elif ch == "'":
-            in_quote = True
-            out.append(ch)
-        elif ch == "$" and i + 1 < n and sql[i + 1].isdigit():
-            j = i + 1
-            while j < n and sql[j].isdigit():
-                j += 1
-            idx = int(sql[i + 1 : j])
-            if not 1 <= idx <= len(literals):
-                raise ValueError(f"parameter ${idx} not bound")
-            out.append(literals[idx - 1])
-            i = j - 1
-        else:
-            out.append(ch)
-        i += 1
-    return "".join(out)
+def _named_markers(sql: str) -> tuple[str, set[str]]:
+    """pg's ``$n`` markers outside literals and comments become Spark's
+    named markers ``:pn``; returns the rewritten SQL and the names."""
+    names: set[str] = set()
+
+    def repl(m: re.Match) -> str:
+        names.add(f"p{int(m.group(1))}")
+        return f":p{int(m.group(1))}"
+
+    return sub_outside_literals(_PG_PARAM_RE, repl, sql), names
+
+
+def _session_chatter(sql: str) -> str | None:
+    """The command tag for the SET/SHOW session statements clients send
+    while connecting, which are accepted no-ops (postgres.rs:114-123);
+    None for anything else. SHOW TBLPROPERTIES is real SQL."""
+    words = sql.lower().split(None, 2)
+    if words[:1] == ["set"] or (words[:1] == ["show"] and words[1:2] != ["tblproperties"]):
+        return words[0].upper()
+    return None
 
 
 class _Handler(socketserver.BaseRequestHandler):
@@ -240,7 +233,7 @@ class _Handler(socketserver.BaseRequestHandler):
     def handle(self) -> None:  # noqa: C901
         sock = self.request
         # per-connection extended-protocol state
-        self._stmts: dict[str, dict] = {}  # name -> {sql, oids, fields}
+        self._stmts: dict[str, dict] = {}  # name -> {sql, markers, oids, fields}
         self._portals: dict[str, dict] = {}
         self._skip_to_sync = False
         try:
@@ -351,21 +344,19 @@ class _Handler(socketserver.BaseRequestHandler):
         return body
 
     def _simple_query(self, sock, sql: str) -> None:
-        # multi-statement split on ';' (postgres.rs:360-395)
-        statements = [s.strip() for s in sql.split(";")]
+        # multi-statement split on the ';'s outside literals and comments
+        # (postgres.rs:360-395); a part that is only a comment is empty
+        masked = mask_literals(sql)
+        cuts = [-1, *(m.start() for m in re.finditer(";", masked)), len(sql)]
         ran_any = False
-        for stmt in statements:
-            if not stmt:
+        for a, b in zip(cuts, cuts[1:]):
+            if not masked[a + 1 : b].strip():
                 continue
+            stmt = sql[a + 1 : b].strip()
             ran_any = True
-            low = stmt.lower()
-            # session-parameter SHOW/SET are accepted no-ops (client
-            # handshake statements); SHOW TBLPROPERTIES is real SQL and
-            # falls through to the catalog
-            if low.startswith("set") or (
-                low.startswith("show") and not low.startswith("show tblproperties")
-            ):
-                sock.sendall(_msg(b"C", _cstr("SET" if low.startswith("set") else "SHOW")))
+            tag = _session_chatter(stmt)
+            if tag:
+                sock.sendall(_msg(b"C", _cstr(tag)))
                 continue
             try:
                 df = self.server.catalog.query_sql(stmt)
@@ -400,8 +391,9 @@ class _Handler(socketserver.BaseRequestHandler):
         # (flight_sql.rs:107-126) — Describe re-plans at most once per
         # Parse; re-Parse of the same name invalidates. "unset" marks
         # not-yet-probed (None is a valid outcome: analysis failed).
-        self._stmts[name] = {"sql": sql.strip().rstrip(";").strip(),
-                             "oids": oids, "fields": "unset"}
+        sql, markers = _named_markers(sql.strip().rstrip(";").strip())
+        self._stmts[name] = {"sql": sql, "markers": markers, "oids": oids,
+                             "fields": "unset"}
         sock.sendall(_msg(b"1", b""))  # ParseComplete
 
     def _bind_msg(self, sock, payload: bytes) -> None:  # noqa: C901
@@ -430,34 +422,31 @@ class _Handler(socketserver.BaseRequestHandler):
             self._ext_error(sock, f"unknown prepared statement {stmt_name!r}")
             return
         stmt = self._stmts[stmt_name]
-        sql, oids = stmt["sql"], stmt["oids"]
+        oids = stmt["oids"]
         try:
-            lits = []
+            args = {}
             for i, raw in enumerate(raws):
                 oid = oids[i] if i < len(oids) else 0
                 # per-param format: 0/1 codes apply all-or-per-param
                 fmt = fmts[i] if len(fmts) == len(raws) else (fmts[0] if fmts else 0)
-                lits.append(_param_literal(raw, oid, fmt))
-            bound = _substitute_params(sql, lits)
-        except (ValueError, struct.error) as exc:
+                args[f"p{i + 1}"] = _param_value(raw, oid, fmt)
+        except (ValueError, ArithmeticError, struct.error) as exc:
             self._ext_error(sock, f"bind failed: {exc}")
             return
         self._portals[portal] = {
-            "sql": bound, "fields": None, "rows": None, "pos": 0, "rfmts": rfmts,
+            "sql": stmt["sql"], "args": args, "fields": None, "rows": None,
+            "pos": 0, "rfmts": rfmts,
         }
         sock.sendall(_msg(b"2", b""))  # BindComplete
 
     def _run_portal(self, p: dict) -> None:
         """Materialize the portal's result set on first Execute/Describe."""
-        low = p["sql"].lower()
-        if not p["sql"] or (
-            (low.startswith(("show ", "set ")) or low in ("show", "set"))
-            and not low.startswith("show tblproperties")
-        ):
+        tag = _session_chatter(p["sql"])
+        if not p["sql"] or tag:
             p["fields"], p["rows"] = [], []
-            p["noop_tag"] = "SET" if low.startswith("set") else "SHOW"
+            p["noop_tag"] = tag or "SHOW"
             return
-        df = self.server.catalog.query_sql(p["sql"])
+        df = self.server.catalog.query_sql(p["sql"], args=p["args"])
         p["fields"] = df.schema.fields
         # Bind's result-format-code list must cover all columns, one, or
         # none (protocol rule); silently text-defaulting the excess would
@@ -485,8 +474,9 @@ class _Handler(socketserver.BaseRequestHandler):
                 try:
                     # schema without execution: bind NULLs, analyze once;
                     # cached on the statement for every later Describe
-                    probe = _substitute_params(stmt["sql"], ["NULL"] * 99)
-                    stmt["fields"] = self.server.catalog.query_sql(probe).schema.fields
+                    stmt["fields"] = self.server.catalog.query_sql(
+                        stmt["sql"], args=dict.fromkeys(stmt["markers"])
+                    ).schema.fields
                 except Exception:  # noqa: BLE001 — NULL-typed probe can fail analysis
                     stmt["fields"] = None
             if stmt["fields"] is not None:

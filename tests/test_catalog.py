@@ -8,8 +8,16 @@ import os
 import time
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
-from roapi_spark.catalog import Catalog, CatalogError, ReadOnlyError, catalog_from_config
+from roapi_spark.catalog import (
+    Catalog,
+    CatalogError,
+    ReadOnlyError,
+    catalog_from_config,
+    mask_literals,
+)
 from roapi_spark.config import parse_config, parse_kv_config, parse_table_config
 
 
@@ -837,3 +845,76 @@ def test_stage_source_keeps_full_suffix(spark, tmp_path):
     )
     staged = cat._stage_source(ts)
     assert staged.uri.endswith(".warc.gz"), staged.uri
+
+
+def test_rewrites_honor_backslash_escapes(spark, csv_file):
+    """An escaped quote does not end a literal: the information_schema
+    rewrite must leave the second literal as Spark reads it."""
+    cat = Catalog(spark)
+    cat.load_table(parse_table_config({"name": "t", "uri": str(csv_file)}))
+    row = cat.query_sql(
+        "SELECT 'it\\'s' AS a, 'information_schema.tables' AS s"
+    ).collect()[0]
+    assert (row.a, row.s) == ("it's", "information_schema.tables")
+
+
+def test_dml_binds_args_natively(spark, delta_cat):
+    """DML takes bound parameters, named or positional, as values: an
+    injection attempt matches no row."""
+    out = delta_cat.query_sql(
+        "DELETE FROM people WHERE name = ?", args=["x' OR 1=1 --"]
+    ).collect()[0]
+    assert out.operation == "DELETE"
+    delta_cat.query_sql(
+        "UPDATE people SET score = :s WHERE id = :id", args={"s": 99.5, "id": 2}
+    ).collect()
+    got = delta_cat.query_sql("SELECT id, score FROM people ORDER BY id").collect()
+    assert [(r.id, r.score) for r in got] == [(1, 10.0), (2, 99.5), (3, 30.0)]
+
+
+_CODE = st.text(alphabet="abcxyz019 \n;?$:=(),.*", max_size=8)
+_SPANS = st.one_of(
+    st.builds(
+        lambda q, parts: q + "".join(parts) + q,
+        st.sampled_from(["'", '"']),
+        st.lists(
+            st.one_of(
+                st.text(alphabet="ab ;?$-/*`\n", min_size=1, max_size=3),
+                st.sampled_from(["\\'", '\\"', "\\\\", "\\n"]),
+            ),
+            max_size=4,
+        ),
+    ),
+    st.builds(lambda b: f"`{b}`", st.text(alphabet="ab ;?$'\"\\-", max_size=6)),
+    st.builds(lambda b: f" r'{b}'", st.text(alphabet="ab ;?\\\"", max_size=6)),
+    st.builds(lambda b: f"--{b}\n", st.text(alphabet="ab ;?'\"`\\*/", max_size=6)),
+    st.builds(
+        lambda b: f"/*{b}*/",
+        st.text(alphabet="ab ;?'\"`\\-*\n", max_size=6).filter(lambda b: "*/" not in b),
+    ),
+)
+
+
+def _expected_mask(span: str) -> str:
+    if span.startswith("--"):  # the newline that ends it is code
+        return " " * (len(span) - 1) + "\n"
+    if span.startswith("/*"):
+        return " " * len(span)
+    head = span.index(span.lstrip(" r")[0]) + 1  # through the opening quote
+    return span[:head] + " " * (len(span) - head - 1) + span[-1]
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.tuples(_CODE, _SPANS), max_size=5), _CODE)
+def test_mask_literals_blanks_exactly_the_spans(pieces, tail):
+    """Same length; code outside every span unchanged; a span keeps its
+    quotes and loses its contents (a comment goes whole)."""
+    sql = "".join(c + s for c, s in pieces) + tail
+    expect = "".join(c + _expected_mask(s) for c, s in pieces) + tail
+    got = mask_literals(sql)
+    assert len(got) == len(sql)
+    assert got == expect
+
+
+def test_mask_literals_doubled_quote_is_two_spans():
+    assert mask_literals("SELECT 'it''s?', ?") == "SELECT '  ''  ', ?"

@@ -244,7 +244,10 @@ def test_doput_rejects_data_ingest(served):
 
 
 def test_count_placeholders_escapes_and_comments():
-    from roapi_spark.server.flight import _count_placeholders as cp
+    from roapi_spark.catalog import mask_literals
+
+    def cp(q):
+        return mask_literals(q).count("?")
 
     assert cp("SELECT ?") == 1
     assert cp("SELECT '?'") == 0

@@ -416,8 +416,11 @@ def test_describe_plans_once_per_parse(pg):
     orig = catalog.query_sql
 
     def counting(sql, *a, **kw):
-        calls.append(sql)
+        calls.append(kw.get("args"))
         return orig(sql, *a, **kw)
+
+    def is_probe(args):  # Describe binds None to every marker
+        return bool(args) and all(v is None for v in args.values())
 
     catalog.query_sql = counting
     try:
@@ -427,13 +430,13 @@ def test_describe_plans_once_per_parse(pg):
             c.describe("S", "pc")
         msgs = c.sync()
         assert _tags(msgs).count(b"T") == 3  # every Describe answered
-        probes = [s for s in calls if "NULL" in s]
+        probes = [a for a in calls if is_probe(a)]
         assert len(probes) == 1, f"expected 1 analysis probe, got {probes}"
         # re-Parse same name -> cache invalidated -> one more probe
         c.parse("pc", "SELECT id, id + 1 AS nxt FROM pgt WHERE id = $1", [20])
         c.describe("S", "pc")
         c.sync()
-        probes = [s for s in calls if "NULL" in s]
+        probes = [a for a in calls if is_probe(a)]
         assert len(probes) == 2
         c.close()
     finally:
@@ -545,3 +548,73 @@ def test_dml_through_pg_wire(spark, tmp_path_factory):
         c.close()
     finally:
         server.stop()
+
+
+# -- one SQL-text scanner, native parameter binding -------------------------
+
+
+@pytest.mark.parametrize(
+    "value", ["\\'", "''", "$2", "?", ";", "--", "/*", "tail\\", "$1::int"]
+)
+def test_bound_text_param_returns_exactly(pg, value):
+    """A bound value is data: quotes, escapes, markers, statement and
+    comment starters all come back byte for byte."""
+    c = MiniPgClient(pg.port)
+    c.parse("", "SELECT $1 AS v", [25])
+    c.bind("", "", [value.encode()])
+    c.execute("")
+    assert parse_data_rows(c.sync()) == [(value,)]
+    c.close()
+
+
+def test_bound_param_is_not_injectable(pg):
+    c = MiniPgClient(pg.port)
+    c.parse("", "SELECT id FROM pgt WHERE CAST(id AS STRING) = $1", [25])
+    c.bind("", "", [b"x\\' OR 1=1 --"])
+    c.execute("")
+    msgs = c.sync()
+    assert b"E" not in _tags(msgs)
+    assert parse_data_rows(msgs) == []
+    c.close()
+
+
+def test_simple_query_splits_outside_literals(pg):
+    c = MiniPgClient(pg.port)
+    msgs = c.query("SELECT 'a;b' AS s; SELECT 2 AS n -- trailing; comment\n;")
+    assert parse_data_rows(msgs) == [("a;b",), ("2",)]
+    completes = [p.rstrip(b"\x00") for t, p in msgs if t == b"C"]
+    assert completes == [b"SELECT 1", b"SELECT 1"]
+    # an escaped quote does not end a literal, so no rewrite fires in it
+    msgs = c.query("SELECT 'it\\'s' AS a, 'information_schema.tables' AS s")
+    assert parse_data_rows(msgs) == [("it's", "information_schema.tables")]
+    c.close()
+
+
+@pytest.mark.parametrize("protocol", ["simple", "extended"])
+@pytest.mark.parametrize(
+    "sql,tag",
+    [
+        ("SET\tsearch_path TO x", b"SET"),
+        ("set application_name = 'psql'", b"SET"),
+        ("SHOW server_version", b"SHOW"),
+        ("SHOW TBLPROPERTIES pgt", None),  # real SQL: reaches the catalog
+    ],
+)
+def test_session_chatter_same_on_both_protocols(pg, protocol, sql, tag):
+    c = MiniPgClient(pg.port)
+    if protocol == "simple":
+        msgs = c.query(sql)
+        prefix = []
+    else:
+        c.parse("", sql, [])
+        c.bind("", "", [])
+        c.execute("")
+        msgs = c.sync()
+        prefix = [b"1", b"2"]
+    if tag is None:
+        err = next(p for t, p in msgs if t == b"E")
+        assert b"delta" in err  # the catalog's own answer for a csv table
+    else:
+        assert _tags(msgs) == [*prefix, b"C", b"Z"]
+        assert msgs[len(prefix)][1].rstrip(b"\x00") == tag
+    c.close()

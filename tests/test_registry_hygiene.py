@@ -11,6 +11,8 @@ import re
 import subprocess
 import sys
 
+import pytest
+
 from roapi_spark.plans.registry import load_all
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -194,3 +196,44 @@ def test_functions_modules_named_by_domain_with_one_tokenizer():
         {rel for sub in ("functions", "streaming") for rel, src in py_files(sub) if "[^a-z]+" in src}
     )
     assert spelled == [os.path.join("functions", "text.py")], spelled
+
+
+_FUNCTIONS_MODULES = sorted(
+    f[:-3]
+    for f in os.listdir(os.path.join(REPO, "roapi_spark", "functions"))
+    if f.endswith(".py") and f != "__init__.py"
+)
+
+
+@pytest.mark.parametrize("module", _FUNCTIONS_MODULES)
+def test_functions_module_imports_first(module):
+    """Each registry module imports on its own in a fresh interpreter:
+    no module reads another's registration before that module ran."""
+    r = subprocess.run(
+        [sys.executable, "-c", f"import roapi_spark.functions.{module}"],
+        cwd=REPO, capture_output=True, text=True, timeout=120,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+
+
+def test_one_sql_text_scanner():
+    """``catalog.mask_literals`` is the one place that decides where a
+    Spark SQL literal or comment starts and ends: no wire frontend and
+    no other part of catalog.py keeps a quote-state loop, splits SQL on
+    a bare ';', or keeps one of the retired scanners."""
+    pkg = os.path.join(REPO, "roapi_spark")
+    server = os.path.join(pkg, "server")
+    paths = [os.path.join(pkg, "catalog.py")] + [
+        os.path.join(server, f) for f in sorted(os.listdir(server)) if f.endswith(".py")
+    ]
+    pat = re.compile(
+        r"\bin_q(?:uote)?\b|\.split\(\s*['\"];['\"]\s*\)"
+        r"|\b(?:_mask_literals|_count_placeholders|_substitute_params|_param_literal)\b"
+    )
+    bad = []
+    for p in paths:
+        with open(p) as f:
+            for i, line in enumerate(f, 1):
+                if pat.search(line):
+                    bad.append(f"{os.path.relpath(p, REPO)}:{i}: {line.strip()}")
+    assert not bad, "SQL-text scanning outside mask_literals:\n" + "\n".join(bad)
