@@ -69,16 +69,24 @@ def mask_literals(sql: str) -> str:
     return _SPAN_RE.sub(_blank_span, sql)
 
 
-def sub_outside_literals(pattern: re.Pattern, repl, sql: str) -> str:
-    """``pattern.sub(repl, sql)`` over code only: each match is found on
-    the mask and re-matched on ``sql``, so its groups carry the real
-    quoted contents."""
-    out: list[str] = []
+def matches_outside_literals(pattern: re.Pattern, sql: str):
+    """``pattern``'s non-overlapping matches in the code of ``sql``: each
+    is found on the mask and re-matched on ``sql``, so its groups carry
+    the real quoted contents."""
     last = 0
     for mm in pattern.finditer(mask_literals(sql)):
         m = pattern.match(sql, mm.start())
         if m is None or m.start() < last:
             continue
+        yield m
+        last = m.end()
+
+
+def sub_outside_literals(pattern: re.Pattern, repl, sql: str) -> str:
+    """``pattern.sub(repl, sql)`` over code only."""
+    out: list[str] = []
+    last = 0
+    for m in matches_outside_literals(pattern, sql):
         out += (sql[last : m.start()], repl(m))
         last = m.end()
     return "".join(out) + sql[last:]
@@ -290,7 +298,7 @@ class Catalog:
     # ANALYZE/...) mutates session or filesystem state.
     _READONLY_COMMAND_PREFIXES = ("Explain", "Show", "Describe")
 
-    def _assert_read_only_sql(self, sql: str) -> None:
+    def _assert_read_only_sql(self, sql: str, args: list | dict | None = None) -> None:
         """Reject non-query SQL before execution in read-only mode.
 
         The reference's read-only gate only covers register/drop
@@ -298,11 +306,17 @@ class Catalog:
         read-only by construction; Spark SQL can write (INSERT OVERWRITE
         DIRECTORY, CTAS LOCATION, DROP VIEW...), so the contract has to be
         enforced at the parser.  ``spark.sql`` executes commands eagerly —
-        the check must run on the *parsed* plan, before execution.
+        the check must run on the *parsed* plan, before execution.  With
+        ``args`` it parses the way ``spark.sql`` binds them: a marker may
+        stand where a plain parse rejects it (``INSERT OVERWRITE
+        DIRECTORY :p``, ``LOCATION ?``), so such a parse failure must
+        not let the statement through.
         """
         try:
-            plan = self._parse_plan(sql)
+            plan = self._parse_plan(sql, args)
         except Exception:
+            if args:
+                raise
             return  # let spark.sql raise its own (nicer) parse error
         jvm = self.spark.sparkContext._jvm
         cmd_cls = jvm.java.lang.Class.forName(
@@ -737,7 +751,7 @@ class Catalog:
 
     def _parse_plan(self, sql: str, args: list | dict | None = None):
         """Spark's parsed plan of ``sql``; ``args`` bind to literals the
-        way ``spark.sql(sql, args=args)`` binds them (Spark >= 4.1)."""
+        way ``spark.sql(sql, args=args)`` binds them."""
         jvm, jss = self.spark._jvm, self.spark._jsparkSession
         parser = jss.sessionState().sqlParser()
         if not args:
@@ -814,18 +828,9 @@ class Catalog:
                 "INSERT ... PARTITION (...) is not supported; the table's "
                 "own partition layout is preserved automatically"
             )
-        # Spark 4.x moved the concrete Dataset into the .classic
-        # namespace; on 3.5 that package doesn't exist (py4j surfaces a
-        # not-callable JavaPackage, i.e. TypeError — a real failure
-        # inside ofRows raises Py4JJavaError instead and propagates).
-        try:
-            jdf = self.spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-                self.spark._jsparkSession, plan.query()
-            )
-        except TypeError:
-            jdf = self.spark._jvm.org.apache.spark.sql.Dataset.ofRows(
-                self.spark._jsparkSession, plan.query()
-            )
+        jdf = self.spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            self.spark._jsparkSession, plan.query()
+        )
         src = PyDataFrame(jdf, self.spark)
         schema = self.table(name).schema
         user_cols = [
@@ -1020,15 +1025,8 @@ class Catalog:
     def _rewrite_time_travel(self, sql: str) -> str:
         out: list[str] = []
         last = 0
-        # scan the literal-masked text (a keyword inside a string value
-        # must not fire), re-matching each hit on the ORIGINAL so the
-        # captured tokens carry the real quoted content
-        for mm in self._TT_KEY_RE.finditer(mask_literals(sql)):
-            m = self._TT_KEY_RE.match(sql, mm.start())
-            if m is None:
-                continue
-            if m.start() < last:  # keyword inside a consumed span
-                continue
+        # a keyword inside a string value must not fire
+        for m in matches_outside_literals(self._TT_KEY_RE, sql):
             found = self._ident_before(sql, m.start())
             if found is None:
                 continue
@@ -1138,7 +1136,7 @@ class Catalog:
                 raise ReadOnlyError(
                     f"read-only mode rejects table maintenance: {sql[:80]}"
                 )
-            self._assert_read_only_sql(sql)
+            self._assert_read_only_sql(sql, args)
         else:
             routed = self._route_maintenance(sql)
             if routed is None:

@@ -618,3 +618,56 @@ def test_session_chatter_same_on_both_protocols(pg, protocol, sql, tag):
         assert _tags(msgs) == [*prefix, b"C", b"Z"]
         assert msgs[len(prefix)][1].rstrip(b"\x00") == tag
     c.close()
+
+
+def test_read_only_rejects_parameterized_write(pg, tmp_path):
+    """The read-only check sees the bound statement: a $1 standing for a
+    directory path must not slip a filesystem write past it."""
+    out = tmp_path / "exfil"
+    c = MiniPgClient(pg.port)
+    for sql, params in [
+        ("INSERT OVERWRITE DIRECTORY $1 USING parquet SELECT 1 AS a", [str(out)]),
+        ("INSERT INTO pgt VALUES ($1, $2, true)", ["9", "z"]),
+    ]:
+        c.parse("", sql, [25] * len(params))
+        c.bind("", "", [p.encode() for p in params])
+        c.execute("")
+        msgs = c.sync()
+        err = next(p for t, p in msgs if t == b"E")
+        assert b"read-only" in err
+    assert not out.exists()
+    assert parse_data_rows(c.query("SELECT count(*) FROM pgt")) == [("3",)]
+    c.close()
+
+
+def test_param_in_rewritten_clause_errors(spark, tmp_path):
+    """A pg parameter cannot stand in a clause the catalog rewrites from
+    the SQL text (time travel, table_changes, RESTORE, VACUUM RETAIN):
+    each such statement errors and leaves the table as it was."""
+    from roapi_spark.sinks.delta import write_delta
+
+    d = str(tmp_path / "tt")
+    for rows, mode in [([(1,)], "overwrite"), ([(2,)], "append")]:
+        write_delta(spark.createDataFrame(rows, "id bigint"), d, mode=mode)
+    cat = Catalog(spark, read_only=False)
+    cat.load_table(parse_table_config({"name": "tt", "uri": d, "option": {"format": "delta"}}))
+    server = PostgresServer(cat)
+    server.start()
+    try:
+        c = MiniPgClient(server.port)
+        for sql, oid, value, needle in [
+            ("SELECT * FROM tt VERSION AS OF $1", 20, b"0", b"TIME_TRAVEL"),
+            ("SELECT * FROM tt TIMESTAMP AS OF $1", 25, b"2020-01-01", b"TIME_TRAVEL"),
+            ("SELECT * FROM table_changes('tt', $1)", 20, b"0", b"table_changes"),
+            ("RESTORE TABLE tt TO VERSION AS OF $1", 20, b"0", b"ParseException"),
+            ("VACUUM tt RETAIN $1 VERSIONS", 20, b"1", b"unsupported VACUUM clause"),
+        ]:
+            c.parse("", sql, [oid])
+            c.bind("", "", [value])
+            c.execute("")
+            err = next(p for t, p in c.sync() if t == b"E")
+            assert needle in err, (sql, err)
+        assert parse_data_rows(c.query("SELECT id FROM tt ORDER BY id")) == [("1",), ("2",)]
+        c.close()
+    finally:
+        server.stop()
