@@ -38,21 +38,33 @@ from roapi_spark.sources import load_table as _load
 # spans, which masks the same), r'…' raw strings take none (the raw
 # test is a lookbehind from the quote, so plain code pays nothing for
 # it), and an unterminated span runs to the end. The one group of each
-# quoted alternative is its closing quote. Spark nests /* */ comments;
-# this scan ends one at its first */.
+# quoted alternative is its closing quote. A /* only opens a comment
+# here: Spark nests /* */ comments, so _comment_end counts the depth.
 _SPAN_RE = re.compile(
     r"""'(?<=[rR]')(?<!\w[rR]')[^']*(')?|"(?<=[rR]")(?<!\w[rR]")[^"]*(")?"""
     r"""|'[^'\\]*(?:\\.[^'\\]*)*(')?"""
     r'''|"[^"\\]*(?:\\.[^"\\]*)*(")?'''
     r"|`[^`]*(`)?"
-    r"|--[^\n]*|/\*.*?(?:\*/|\Z)",
+    r"|--[^\n]*|/\*",
     re.S,
 )
+_COMMENT_MARK_RE = re.compile(r"/\*|\*/")
+
+
+def _comment_end(sql: str, start: int) -> int:
+    """End of the (nested) /* */ comment opened at ``start``; an
+    unclosed one runs to the end."""
+    depth = 0
+    for m in _COMMENT_MARK_RE.finditer(sql, start):
+        depth += 1 if m.group() == "/*" else -1
+        if depth == 0:
+            return m.end()
+    return len(sql)
 
 
 def _blank_span(m: re.Match) -> str:
     s = m.group()
-    if s[0] in "-/":  # a comment goes whole
+    if s[0] == "-":  # a line comment goes whole
         return " " * len(s)
     tail = 1 if m.lastindex else 0
     return s[0] + " " * (len(s) - 1 - tail) + s[len(s) - tail :]
@@ -66,7 +78,17 @@ def mask_literals(sql: str) -> str:
     ``;`` or ``$n`` runs on the mask and never fires inside a literal.
     This is the one place that decides where a literal or comment
     starts and ends."""
-    return _SPAN_RE.sub(_blank_span, sql)
+    out: list[str] = []
+    pos = 0
+    while m := _SPAN_RE.search(sql, pos):
+        if m.group() == "/*":
+            end = _comment_end(sql, m.start())
+            out += (sql[pos : m.start()], " " * (end - m.start()))
+        else:
+            end = m.end()
+            out += (sql[pos : m.start()], _blank_span(m))
+        pos = end
+    return "".join(out) + sql[pos:]
 
 
 def matches_outside_literals(pattern: re.Pattern, sql: str):

@@ -41,6 +41,7 @@ from roapi_spark.functions.fixtures import (
     warc_images_dir,
     warc_shards,
 )
+from roapi_spark.functions.text import NORM_WS_DUCK, norm_ws_col
 from roapi_spark.functions.web import (
     canonical_url,
     parse_robots,
@@ -52,7 +53,6 @@ from roapi_spark.functions.web import (
     url_host,
 )
 from roapi_spark.plans.registry import register
-from roapi_spark.util import WS_CLASS
 
 
 # ---------------------------------------------------------------------------
@@ -72,7 +72,7 @@ _MIN_TEXT = 200  # funnel stage: ws-normalized main text must reach this
 
 # ---- oracle SQL fragments shared across the gates -------------------------
 
-NORM_LEN = "length(trim(regexp_replace(text, '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')))"
+NORM_LEN = f"length(trim({NORM_WS_DUCK}))"
 
 # messy raw URLs reconstructed from the documents table (primary form,
 # then the duplicate form for the %13 residue) — mirrors _raw_url/_dup_url
@@ -207,7 +207,7 @@ def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
         .select(
             "doc_id",
-            F.trim(F.regexp_replace("text", WS_CLASS + "+", " ")).alias("norm_text"),
+            F.trim(norm_ws_col()).alias("norm_text"),
         )
     )
     joined = extracted.withColumn(
@@ -2465,7 +2465,7 @@ def _domain_cap_oracle() -> str:
     WITH d AS (
       SELECT doc_id,
              {host_case_sql(PSL_HOSTS)} AS host,
-             length(trim(regexp_replace(text, '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))) AS q
+             {NORM_LEN} AS q
       FROM documents
     ),
     dom AS (
@@ -2515,9 +2515,7 @@ def q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     dom = d.select(
         "doc_id",
         registrable_domain(host_case_col(PSL_HOSTS)).alias("domain"),
-        F.length(
-            F.trim(F.regexp_replace(F.col("text"), WS_CLASS + "+", " "))
-        ).alias("q"),
+        F.length(F.trim(norm_ws_col())).alias("q"),
     )
     rn = F.row_number().over(
         Window.partitionBy("domain").orderBy(F.desc("q"), F.asc("doc_id"))

@@ -28,11 +28,16 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from roapi_spark.functions.text import TOKENS_DUCK, docs, tokens_col
+from roapi_spark.functions.text import (
+    NORM_WS_DUCK,
+    TOKENS_DUCK,
+    docs,
+    norm_ws_col,
+    tokens_col,
+)
 from roapi_spark.plans.registry import register
 from roapi_spark.plans.util import maybe_broadcast
 from roapi_spark.util import (
-    WS_CLASS,
     hash32,
     hash32_sql,
     pround,
@@ -802,7 +807,7 @@ def _components_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_apply",
-    oracle="""
+    oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_kept,
            CAST(SUM(n_chars) AS BIGINT) AS kept_chars,
            CAST(MIN(doc_id) AS BIGINT) AS first_kept,
@@ -811,7 +816,7 @@ def _components_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE doc_id IN (
       SELECT MIN(doc_id)
       FROM documents
-      GROUP BY MD5(LOWER(REGEXP_REPLACE(text, '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')))
+      GROUP BY MD5(LOWER({NORM_WS_DUCK}))
     )
     """,
     doc="Dedup APPLY step: keep the lowest doc_id per normalized-content "
@@ -821,7 +826,7 @@ def _components_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs(spark, sf_dir)
-    norm_hash = F.md5(F.lower(F.regexp_replace("text", WS_CLASS + "+", " ")))
+    norm_hash = F.md5(F.lower(norm_ws_col()))
     keepers = (
         d.select(norm_hash.alias("h"), "doc_id")
         .groupBy("h")

@@ -27,16 +27,18 @@ from pyspark.sql import types as T
 
 from roapi_spark.functions.dedup import shingle_array_of
 from roapi_spark.functions.text import (
+    NORM_WS_DUCK,
     TOKENS_DUCK,
     WORDS_DUCK,
     docs,
+    norm_ws_col,
     stopword_hits,
     tokens_col,
     words_col,
 )
 from roapi_spark.plans.registry import register
 from roapi_spark.plans.util import maybe_broadcast
-from roapi_spark.util import WS_CLASS, pround, pround_sql
+from roapi_spark.util import pround, pround_sql
 
 
 GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
@@ -1455,7 +1457,7 @@ _CHAT_ROLES = ("system", "user", "assistant")
 )
 def q_chat_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    norm = F.regexp_replace(F.col("text"), WS_CLASS + "+", " ")
+    norm = norm_ws_col()
     br = F.col("doc_id") % 8 == 1
     be = ~br & (F.col("doc_id") % 9 == 4)
     ec = ~br & ~be & (F.col("doc_id") % 12 == 7)
@@ -1528,10 +1530,10 @@ def q_chat_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_pref_pair_audit",
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT doc_id,
-             length(trim(regexp_replace(text, '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))) AS nl,
+             length(trim({NORM_WS_DUCK})) AS nl,
              (doc_id % 10 = 6) AS degen,
              (doc_id % 7 = 3) AS dupp
       FROM documents
@@ -1576,7 +1578,7 @@ def q_chat_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_pref_pair_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    norm = F.trim(F.regexp_replace(F.col("text"), WS_CLASS + "+", " "))
+    norm = F.trim(norm_ws_col())
     degen = F.col("doc_id") % 10 == 6
     dupp = F.col("doc_id") % 7 == 3
     half = F.substring(norm, F.lit(1), (F.length(norm) / 2).cast("int"))

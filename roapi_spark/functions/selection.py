@@ -29,11 +29,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from roapi_spark.functions.dedup import SPAN_CTE, dedup_span_rewrite_served
-from roapi_spark.functions.text import TOKENS_DUCK, docs, tokens_col
+from roapi_spark.functions.text import (
+    NORM_WS_DUCK,
+    TOKENS_DUCK,
+    docs,
+    norm_ws_col,
+    tokens_col,
+)
 from roapi_spark.plans.registry import register
 from roapi_spark.plans.util import maybe_broadcast
 from roapi_spark.util import (
-    WS_CLASS,
     hash_bucket,
     hash_bucket_sql,
     pround,
@@ -964,7 +969,7 @@ def q_train_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH k AS (
       SELECT doc_id,
-             LEAST(9, length(trim(regexp_replace(text, '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')))
+             LEAST(9, length(trim({NORM_WS_DUCK}))
                       // 100) AS bucket,
              ('0x' || SUBSTR(MD5(doc_id::VARCHAR || ':{_SHUFFLE_SALT}'),
                              1, 8))::BIGINT AS key
@@ -1006,12 +1011,7 @@ def q_train_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.least(
             F.lit(9),
-            F.floor(
-                F.length(
-                    F.trim(F.regexp_replace(F.col("text"), WS_CLASS + "+", " "))
-                )
-                / 100
-            ),
+            F.floor(F.length(F.trim(norm_ws_col())) / 100),
         )
         .cast("bigint")
         .alias("bucket"),

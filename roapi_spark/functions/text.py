@@ -2,9 +2,10 @@
 
 Every corpus query reads ``documents`` through ``docs()`` and tokenizes
 through one Spark/DuckDB pair per decision: ``tokens_col()`` /
-``TOKENS_DUCK`` (lowercase ``[a-z]+`` runs) and ``words_col()`` /
-``WORDS_DUCK`` (whitespace-separated words). Oracles interpolate the
-DuckDB half, so the two engines cannot drift apart.
+``TOKENS_DUCK`` (lowercase ``[a-z]+`` runs), ``words_col()`` /
+``WORDS_DUCK`` (whitespace-separated words) and ``norm_ws_col()`` /
+``NORM_WS_DUCK`` (each whitespace run collapsed to one space). Oracles
+interpolate the DuckDB half, so the two engines cannot drift apart.
 
 Operators here: token counting, quality scoring, language scoring,
 document fingerprinting.
@@ -53,6 +54,16 @@ def words_col() -> Column:
     """Non-empty whitespace-separated words (the Spark twin of
     ``WORDS_DUCK``)."""
     return F.filter(F.split(F.col("text"), WS_CLASS + "+"), lambda x: F.length(x) > 0)
+
+
+# each whitespace run collapsed to one space
+NORM_WS_DUCK = f"regexp_replace(text, '{WS_CLASS}+', ' ', 'g')"
+
+
+def norm_ws_col() -> Column:
+    """``text`` with each whitespace run collapsed to one space (the
+    Spark twin of ``NORM_WS_DUCK``)."""
+    return F.regexp_replace(F.col("text"), WS_CLASS + "+", " ")
 
 
 def stopword_hits(toks: Column, words: list[str]) -> Column:
@@ -210,10 +221,10 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           MD5(LOWER(REGEXP_REPLACE(text, '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))) AS fp_full,
-           MD5(SUBSTR(LOWER(REGEXP_REPLACE(text, '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), 1, 64)) AS fp_prefix64
+           MD5(LOWER({NORM_WS_DUCK})) AS fp_full,
+           MD5(SUBSTR(LOWER({NORM_WS_DUCK}), 1, 64)) AS fp_prefix64
     FROM documents
     """,
     doc="Document fingerprinting: md5 over whitespace-normalized text "
@@ -222,7 +233,7 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs(spark, sf_dir)
-    norm = F.lower(F.regexp_replace("text", WS_CLASS + "+", " "))
+    norm = F.lower(norm_ws_col())
     return d.select(
         "doc_id",
         F.md5(norm).alias("fp_full"),
@@ -232,9 +243,9 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_rolling_fingerprint",
-    oracle="""
+    oracle=f"""
     WITH norm AS (
-      SELECT doc_id, LOWER(REGEXP_REPLACE(text, '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')) AS s FROM documents
+      SELECT doc_id, LOWER({NORM_WS_DUCK}) AS s FROM documents
     ),
     grams AS (  -- polynomial rolling hash of every 8-char gram, base 131 mod 2^31-1
       SELECT doc_id,
@@ -265,9 +276,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs(spark, sf_dir)
-    norm = d.select(
-        "doc_id", F.lower(F.regexp_replace("text", WS_CLASS + "+", " ")).alias("s")
-    )
+    norm = d.select("doc_id", F.lower(norm_ws_col()).alias("s"))
     # Hoist the char extraction: ONE pass per character into an integer
     # array. Round 7 used ascii(substr(s, i, 1)) per position — but
     # UTF8String.substring seeks from the string start, so building the

@@ -1,17 +1,15 @@
-"""GraphQL query planner.
+"""GraphQL frontend (reference: columnq/src/query/graphql.rs).
 
-Reference semantics (columnq/src/query/graphql.rs):
+Parses one query into :func:`roapi_spark.query.plan_table_query`:
 - single operation; first selection Field names the table
   (graphql.rs:150-224);
 - ``filter:`` argument — object form ``{col: {gt: 3, lteq: 5}}`` (multiple
   ops per column ANDed) or bare literal ``{col: "x"}`` meaning equality
   (graphql.rs:103-148); literal types Bool/String/Int/Float
   (graphql.rs:80-101);
-- ``sort: [{field: "c", order: "desc"}]`` (graphql.rs:37-78); nulls first
-  in both directions (query/mod.rs:6-20);
-- ``limit:`` / ``page:`` — skip=(page-1)*limit (graphql.rs:303-342);
-- plan order: filter -> projection (selection set) -> sort -> limit
-  (graphql.rs:226-345).
+- the selection set is the projection;
+- ``sort: [{field: "c", order: "desc"}]`` (graphql.rs:37-78);
+- ``limit:`` / ``page:`` (graphql.rs:303-342).
 
 Parsing uses graphql-core (public PyPI), the Python analogue of the
 reference's graphql_parser crate.
@@ -23,23 +21,13 @@ from typing import Any
 
 from graphql import parse
 from graphql.language import ast as gql_ast
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from roapi_spark.query import FILTER_OPS, plan_table_query
 
 
 class GraphQLQueryError(ValueError):
     pass
-
-
-_FILTER_OPS = {
-    "eq": lambda c, v: c == F.lit(v),
-    "lt": lambda c, v: c < F.lit(v),
-    "lte": lambda c, v: c <= F.lit(v),
-    "lteq": lambda c, v: c <= F.lit(v),
-    "gt": lambda c, v: c > F.lit(v),
-    "gte": lambda c, v: c >= F.lit(v),
-    "gteq": lambda c, v: c >= F.lit(v),
-}
 
 
 def _value(node: gql_ast.ValueNode) -> Any:
@@ -58,22 +46,39 @@ def _value(node: gql_ast.ValueNode) -> Any:
     raise GraphQLQueryError(f"unsupported literal: {node.kind}")
 
 
-def _filter_predicates(obj: gql_ast.ObjectValueNode) -> list[Column]:
-    preds: list[Column] = []
+def _filters(obj: gql_ast.ValueNode) -> list[tuple[str, str, Any]]:
+    if not isinstance(obj, gql_ast.ObjectValueNode):
+        raise GraphQLQueryError("filter must be an object")
+    out = []
     for field in obj.fields:
-        col = F.col(field.name.value)
+        col = field.name.value
         val = field.value
         if isinstance(val, gql_ast.ObjectValueNode):
             # operator form: {col: {gt: 3, lteq: 5}} — ops ANDed
             for op_field in val.fields:
                 op = op_field.name.value
-                if op not in _FILTER_OPS:
+                if op not in FILTER_OPS:
                     raise GraphQLQueryError(f"unsupported filter op: {op}")
-                preds.append(_FILTER_OPS[op](col, _value(op_field.value)))
+                out.append((col, op, _value(op_field.value)))
         else:
             # bare literal = equality (graphql.rs:140-146)
-            preds.append(col == F.lit(_value(val)))
-    return preds
+            out.append((col, "eq", _value(val)))
+    return out
+
+
+def _sort(snode: gql_ast.ValueNode) -> list[tuple[str, bool]]:
+    if not isinstance(snode, gql_ast.ListValueNode):
+        raise GraphQLQueryError("sort must be a list")
+    keys = []
+    for item in snode.values:
+        if not isinstance(item, gql_ast.ObjectValueNode):
+            raise GraphQLQueryError("sort entries must be objects")
+        fields = {f.name.value: _value(f.value) for f in item.fields}
+        name = fields.get("field")
+        if not name:
+            raise GraphQLQueryError("sort entry missing field")
+        keys.append((name, str(fields.get("order", "asc")).lower() == "desc"))
+    return keys
 
 
 def graphql_to_df(tables: dict[str, DataFrame], query: str) -> DataFrame:
@@ -88,53 +93,17 @@ def graphql_to_df(tables: dict[str, DataFrame], query: str) -> DataFrame:
     table_name = field.name.value
     if table_name not in tables:
         raise GraphQLQueryError(f"table not found: {table_name}")
-    df = tables[table_name]
 
     args = {a.name.value: a.value for a in field.arguments or []}
-
-    # 1. filter
-    if "filter" in args:
-        fnode = args["filter"]
-        if not isinstance(fnode, gql_ast.ObjectValueNode):
-            raise GraphQLQueryError("filter must be an object")
-        for pred in _filter_predicates(fnode):
-            df = df.filter(pred)
-
-    # 2. projection from the selection set
-    if field.selection_set:
-        cols = [
-            s.name.value
-            for s in field.selection_set.selections
-            if isinstance(s, gql_ast.FieldNode)
-        ]
-        if cols:
-            df = df.select(*cols)
-
-    # 3. sort
-    if "sort" in args:
-        snode = args["sort"]
-        if not isinstance(snode, gql_ast.ListValueNode):
-            raise GraphQLQueryError("sort must be a list")
-        order: list[Column] = []
-        for item in snode.values:
-            if not isinstance(item, gql_ast.ObjectValueNode):
-                raise GraphQLQueryError("sort entries must be objects")
-            fields = {f.name.value: _value(f.value) for f in item.fields}
-            name = fields.get("field")
-            if not name:
-                raise GraphQLQueryError("sort entry missing field")
-            if str(fields.get("order", "asc")).lower() == "desc":
-                order.append(F.col(name).desc_nulls_first())
-            else:
-                order.append(F.col(name).asc_nulls_first())
-        if order:
-            df = df.orderBy(*order)
-
-    # 4. limit/page
-    if "limit" in args:
-        limit = int(_value(args["limit"]))
-        page = int(_value(args["page"])) if "page" in args else 1
-        if page > 1:
-            df = df.offset((page - 1) * limit)
-        df = df.limit(limit)
-    return df
+    filters = _filters(args["filter"]) if "filter" in args else []
+    columns = [
+        s.name.value
+        for s in (field.selection_set.selections if field.selection_set else ())
+        if isinstance(s, gql_ast.FieldNode)
+    ]
+    sort = _sort(args["sort"]) if "sort" in args else []
+    limit = int(_value(args["limit"])) if "limit" in args else None
+    page = int(_value(args["page"])) if limit is not None and "page" in args else 1
+    return plan_table_query(
+        tables[table_name], filters, columns or None, sort, limit, page
+    )

@@ -1,21 +1,12 @@
-"""REST query-param planner.
+"""REST query-param frontend (reference: columnq/src/query/rest.rs).
 
-Reference semantics (columnq/src/query/rest.rs):
+Parses the params into :func:`roapi_spark.query.plan_table_query`:
 - ``filter[col]`` / ``filter[col]eq`` / lt / lte|lteq / gt / gte|gteq
   (rest.rs:60-115); values are SQL-ish literals: quoted -> string,
   otherwise int then float then bare string (rest.rs:23-51).
 - ``columns=c1,c2`` projection (rest.rs:117-123).
-- ``sort=c1,-c2,+c3`` — ``-`` desc, bare/``+`` asc; **nulls first in both
-  directions** (query/mod.rs:6-20). Spark's desc defaults to nulls-last, so
-  we call desc_nulls_first explicitly.
-- ``limit=N&page=P`` applied after sort (limit-after-sort determinism,
-  rest.rs:139-153); skip = (page-1)*limit.
-- Plan order is fixed: filters -> projection -> sort -> limit/page
-  (rest.rs:64-155).
-
-The planner only *builds* a DataFrame chain — Catalyst still pushes the
-predicates into the scan, so a REST call over a 100 TB table reads only the
-matching row groups / partitions.
+- ``sort=c1,-c2,+c3`` — ``-`` desc, bare/``+`` asc.
+- ``limit=N&page=P`` (rest.rs:139-153).
 """
 
 from __future__ import annotations
@@ -24,21 +15,10 @@ import re
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+
+from roapi_spark.query import FILTER_OPS, plan_table_query, sort_column
 
 FILTER_RE = re.compile(r"^filter\[(?P<col>[^\]]+)\](?P<op>\w*)$")
-
-_OPS = {
-    None: "eq",
-    "": "eq",
-    "eq": "eq",
-    "lt": "lt",
-    "lte": "lteq",
-    "lteq": "lteq",
-    "gt": "gt",
-    "gte": "gteq",
-    "gteq": "gteq",
-}
 
 
 class RestQueryError(ValueError):
@@ -68,65 +48,40 @@ def parse_literal(raw: str) -> Any:
     return s
 
 
-def _apply_op(c: Column, op: str, value: Any) -> Column:
-    if op == "eq":
-        return c == F.lit(value)
-    if op == "lt":
-        return c < F.lit(value)
-    if op == "lteq":
-        return c <= F.lit(value)
-    if op == "gt":
-        return c > F.lit(value)
-    if op == "gteq":
-        return c >= F.lit(value)
-    raise RestQueryError(f"unsupported filter op: {op}")
+def _sort_keys(sort_param: str) -> list[tuple[str, bool]]:
+    keys = []
+    for token in sort_param.split(","):
+        token = token.strip()
+        if token:
+            desc = token.startswith("-")
+            keys.append((token[1:] if desc else token.removeprefix("+"), desc))
+    return keys
 
 
 def sort_columns(sort_param: str) -> list[Column]:
     """``sort=c1,-c2,+c3`` -> order-by columns, nulls first both ways."""
-    cols: list[Column] = []
-    for token in sort_param.split(","):
-        token = token.strip()
-        if not token:
-            continue
-        if token.startswith("-"):
-            cols.append(F.col(token[1:]).desc_nulls_first())
-        elif token.startswith("+"):
-            cols.append(F.col(token[1:]).asc_nulls_first())
-        else:
-            cols.append(F.col(token).asc_nulls_first())
-    return cols
+    return [sort_column(name, desc) for name, desc in _sort_keys(sort_param)]
 
 
 def rest_query_to_df(df: DataFrame, params: dict[str, str]) -> DataFrame:
-    """Apply REST params in the reference's fixed order:
-    filters -> projection -> sort -> limit/page."""
-    # 1. filters (each ANDed via successive .filter, rest.rs:84-115)
+    filters = []
     for key, raw in params.items():
         m = FILTER_RE.match(key)
         if not m:
             continue
-        op = _OPS.get(m.group("op"))
-        if op is None:
+        op = m.group("op") or "eq"
+        if op not in FILTER_OPS:
             raise RestQueryError(f"unsupported filter op in {key!r}")
-        df = df.filter(_apply_op(F.col(m.group("col")), op, parse_literal(raw)))
-
-    # 2. projection
+        filters.append((m.group("col"), op, parse_literal(raw)))
+    columns = None
     if "columns" in params:
-        cols = [c.strip() for c in params["columns"].split(",") if c.strip()]
-        df = df.select(*cols)
-
-    # 3. sort
-    if "sort" in params:
-        order = sort_columns(params["sort"])
-        if order:
-            df = df.orderBy(*order)
-
-    # 4. limit/page (after sort)
-    if "limit" in params:
-        limit = int(params["limit"])
-        page = int(params.get("page", "1"))
-        if page > 1:
-            df = df.offset((page - 1) * limit)
-        df = df.limit(limit)
-    return df
+        columns = [c.strip() for c in params["columns"].split(",") if c.strip()]
+    limit = int(params["limit"]) if "limit" in params else None
+    return plan_table_query(
+        df,
+        filters,
+        columns,
+        _sort_keys(params.get("sort", "")),
+        limit,
+        int(params.get("page", "1")) if limit is not None else 1,
+    )

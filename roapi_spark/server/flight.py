@@ -35,7 +35,6 @@ Protocol mapping (same lifecycle as the reference):
 
 from __future__ import annotations
 
-import hmac
 import json
 import threading
 import uuid
@@ -46,6 +45,7 @@ import pyarrow.flight as flight
 import roapi_spark
 from roapi_spark.catalog import Catalog, mask_literals
 from roapi_spark.server import flightsql_proto as fsp
+from roapi_spark.server.auth import credential_scheme
 
 # arrow.flight.protocol.sql.SqlInfo ids (flight_sql.rs sql_info parity)
 SQL_INFO_SERVER_NAME = 0
@@ -89,22 +89,6 @@ _XDBC_TYPES: list[tuple] = [
 ]
 
 
-def _sql_info_value_type() -> pa.DenseUnionType:
-    return pa.dense_union(
-        [
-            pa.field("string_value", pa.string()),
-            pa.field("bool_value", pa.bool_()),
-            pa.field("bigint_value", pa.int64()),
-            pa.field("int32_bitmask", pa.int32()),
-            pa.field("string_list", pa.list_(pa.string())),
-            pa.field(
-                "int32_to_int32_list_map", pa.map_(pa.int32(), pa.list_(pa.int32()))
-            ),
-        ],
-        type_codes=[0, 1, 2, 3, 4, 5],
-    )
-
-
 class _BearerResponder(flight.ServerMiddleware):
     """Returned on a successful Basic handshake so the bearer token rides
     back on the response headers — the pyarrow client's
@@ -131,8 +115,8 @@ class _NoOpAuthHandler(flight.ServerAuthHandler):
 
 
 class _AuthMiddlewareFactory(flight.ServerMiddlewareFactory):
-    """Bearer and/or HTTP-Basic auth with constant-time compares
-    (flight_sql.rs:164-277, M9)."""
+    """Bearer and/or HTTP-Basic auth (flight_sql.rs:164-277, M9) through
+    :func:`credential_scheme`, the check the HTTP front uses."""
 
     def __init__(self, token: str | None, basic_users: dict[str, str] | None) -> None:
         # with only basic users configured, mint the session bearer the
@@ -140,24 +124,13 @@ class _AuthMiddlewareFactory(flight.ServerMiddlewareFactory):
         self._token = token or uuid.uuid4().hex
         self._users = basic_users or {}
 
-    def _check_basic(self, b64: str) -> bool:
-        import base64
-
-        try:
-            user, _, password = base64.b64decode(b64).decode().partition(":")
-        except Exception:
-            return False
-        expect = self._users.get(user)
-        return expect is not None and hmac.compare_digest(password, expect)
-
     def start_call(self, info, headers):
         auths = headers.get("authorization") or headers.get("Authorization") or []
         for a in auths:
-            if a.lower().startswith("bearer ") and hmac.compare_digest(
-                a[7:], self._token
-            ):
+            scheme = credential_scheme(a, self._token, self._users)
+            if scheme == "bearer":
                 return None
-            if a.lower().startswith("basic ") and self._check_basic(a[6:]):
+            if scheme == "basic":
                 return _BearerResponder(self._token)
         raise flight.FlightUnauthenticatedError("invalid or missing credentials")
 

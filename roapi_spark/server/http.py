@@ -30,6 +30,7 @@ from urllib.parse import parse_qsl, unquote, urlparse
 import roapi_spark
 from roapi_spark.catalog import Catalog, CatalogError, ReadOnlyError
 from roapi_spark.encoders import CONTENT_TYPES, encode_dataframe, format_from_accept
+from roapi_spark.server.auth import credential_scheme
 
 
 # SQL console (reference: roapi-ui, an egui/wasm app with a schema side
@@ -302,35 +303,15 @@ class ApiServer:
 
     def authorize(self, authorization: str | None, path: str = "") -> bool:
         """HTTP auth layer (beyond the reference — its own unchecked
-        roadmap box): bearer and/or basic credentials, constant-time
-        compares, shared by the HTTP/1.1 and h2c fronts. /health stays
-        open for load-balancer probes. No credentials configured =>
-        open server (the reference's default)."""
+        roadmap box): bearer and/or basic credentials
+        (:func:`credential_scheme`), shared by the HTTP/1.1 and h2c
+        fronts. /health stays open for load-balancer probes. No
+        credentials configured => open server (the reference's default)."""
         if self.auth_token is None and self.basic_auth is None:
             return True
         if path == "/health":
             return True
-        import base64
-        import hmac
-
-        a = authorization or ""
-        # compare utf-8 bytes: compare_digest(str, str) raises TypeError
-        # on non-ASCII, which would turn a legitimate unicode password
-        # into a dropped connection
-        if self.auth_token is not None and a.lower().startswith("bearer "):
-            return hmac.compare_digest(
-                a[7:].strip().encode("utf-8"), self.auth_token.encode("utf-8")
-            )
-        if self.basic_auth is not None and a.lower().startswith("basic "):
-            try:
-                user, _, pw = base64.b64decode(a[6:].strip()).decode().partition(":")
-            except Exception:  # noqa: BLE001 — malformed base64
-                return False
-            expect = self.basic_auth.get(user)
-            return expect is not None and hmac.compare_digest(
-                pw.encode("utf-8"), expect.encode("utf-8")
-            )
-        return False
+        return credential_scheme(authorization, self.auth_token, self.basic_auth) is not None
 
     def auth_challenge(self) -> list[tuple[str, str]]:
         """WWW-Authenticate headers for a 401 (RFC 7235 — browsers only

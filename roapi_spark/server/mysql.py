@@ -27,19 +27,16 @@ Pure stdlib (struct + socketserver), threaded like the pg server.
 
 from __future__ import annotations
 
-import json
 import os
 import socketserver
 import struct
 import threading
-from datetime import date, datetime
 
-from pyspark.sql import Row
 from pyspark.sql import types as T
 
 from roapi_spark.catalog import Catalog
 from roapi_spark.sources.mysqlwire import _native_password_scramble
-from roapi_spark.util import jsonable
+from roapi_spark.server.wire import WireServer, error_text, recv_exact, render_text
 
 _CLIENT_CONNECT_WITH_DB = 0x8
 _CLIENT_PROTOCOL_41 = 0x200
@@ -75,19 +72,11 @@ def _mysql_type(dt: T.DataType) -> int:
 
 
 def _render(v: object) -> bytes | None:
-    if v is None:
-        return None
     if isinstance(v, bool):
         return b"1" if v else b"0"
-    if isinstance(v, datetime):
-        return v.isoformat(sep=" ").encode()
-    if isinstance(v, date):
-        return v.isoformat().encode()
     if isinstance(v, (bytes, bytearray)):
         return bytes(v)  # collect() yields bytearray for BinaryType
-    if isinstance(v, (list, dict, Row)):
-        return json.dumps(jsonable(v), default=str).encode()
-    return str(v).encode()
+    return render_text(v)
 
 
 def _lenenc_int(n: int) -> bytes:
@@ -123,7 +112,7 @@ def _col_def(name: str, ctype: int) -> bytes:
 
 
 class _Handler(socketserver.BaseRequestHandler):
-    # self.server carries: catalog, users, force_auth_switch
+    # self.server is the MySqlServer: catalog, users, force_auth_switch
 
     def handle(self) -> None:
         sock = self.request
@@ -148,24 +137,15 @@ class _Handler(socketserver.BaseRequestHandler):
 
     # -- framing -------------------------------------------------------------
 
-    def _recv_exact(self, sock, n: int) -> bytes | None:
-        data = b""
-        while len(data) < n:
-            chunk = sock.recv(n - len(data))
-            if not chunk:
-                return None
-            data += chunk
-        return data
-
     def _read_packet(self, sock) -> bytes | None:
         data = b""
         while True:
-            hdr = self._recv_exact(sock, 4)
+            hdr = recv_exact(sock, 4)
             if hdr is None:
                 return None
             length = hdr[0] | (hdr[1] << 8) | (hdr[2] << 16)
             self._seq = hdr[3] + 1
-            body = self._recv_exact(sock, length)
+            body = recv_exact(sock, length)
             if body is None:
                 return None
             data += body
@@ -240,13 +220,13 @@ class _Handler(socketserver.BaseRequestHandler):
             self._err(sock, 1043, "malformed handshake response")
             return False
 
-        if plugin != _NATIVE or self.server.force_auth_switch:  # type: ignore[attr-defined]
+        if plugin != _NATIVE or self.server.force_auth_switch:
             # drive the client's AuthSwitch branch: new nonce, re-scramble
             nonce = self._nonce()
             self._send(sock, b"\xfe" + _NATIVE.encode() + b"\x00" + nonce + b"\x00")
             auth = self._read_packet(sock) or b""
 
-        users = self.server.users  # type: ignore[attr-defined]
+        users = self.server.users
         if user not in users:
             self._err(sock, 1045, f"access denied for user '{user}'")
             return False
@@ -266,11 +246,11 @@ class _Handler(socketserver.BaseRequestHandler):
             self._send(sock, b"\x00\x00\x00\x02\x00\x00\x00")
             return
         try:
-            df = self.server.catalog.query_sql(sql)  # type: ignore[attr-defined]
+            df = self.server.catalog.query_sql(sql)
             fields = df.schema.fields
             rows = df.collect()
         except Exception as exc:  # noqa: BLE001 — surface as wire error
-            self._err(sock, 1064, str(exc).split("\n", 1)[0][:400] or type(exc).__name__)
+            self._err(sock, 1064, error_text(exc, 400))
             return
         self._send(sock, _lenenc_int(len(fields)))
         for f in fields:
@@ -295,7 +275,7 @@ class _Handler(socketserver.BaseRequestHandler):
         )
 
 
-class MySqlServer:
+class MySqlServer(WireServer):
     """Threaded MySQL-wire endpoint over a Catalog (loopback twin of
     :class:`roapi_spark.server.postgres.PostgresServer`)."""
 
@@ -307,25 +287,6 @@ class MySqlServer:
         users: dict[str, str] | None = None,
         force_auth_switch: bool = False,
     ) -> None:
-        self.catalog = catalog
-        socketserver.ThreadingTCPServer.allow_reuse_address = True
-        self._server = socketserver.ThreadingTCPServer((host, port), _Handler)
-        self._server.daemon_threads = True
-        self._server.catalog = catalog  # type: ignore[attr-defined]
-        self._server.users = users if users is not None else {"spark": ""}  # type: ignore[attr-defined]
-        self._server.force_auth_switch = force_auth_switch  # type: ignore[attr-defined]
-        self._thread: threading.Thread | None = None
-
-    @property
-    def port(self) -> int:
-        return self._server.server_address[1]
-
-    def start(self) -> None:
-        self._thread = threading.Thread(
-            target=self._server.serve_forever, daemon=True
-        )
-        self._thread.start()
-
-    def stop(self) -> None:
-        self._server.shutdown()
-        self._server.server_close()
+        super().__init__(catalog, host, port, _Handler)
+        self.users = users if users is not None else {"spark": ""}
+        self.force_auth_switch = force_auth_switch

@@ -31,14 +31,12 @@ import decimal
 import re
 import socketserver
 import struct
-import threading
 from datetime import date, datetime
 
-from pyspark.sql import Row
 from pyspark.sql import types as T
 
 from roapi_spark.catalog import Catalog, mask_literals, sub_outside_literals
-from roapi_spark.util import jsonable
+from roapi_spark.server.wire import WireServer, error_text, recv_exact, render_text
 
 _SSL_REQUEST = 80877103
 _STARTUP_V3 = 196608
@@ -72,21 +70,11 @@ def _oid_for(dt: T.DataType) -> int:
 
 def _render(v: object) -> bytes | None:
     """Text-format rendering, pg conventions (all-text like the reference)."""
-    if v is None:
-        return None
     if isinstance(v, bool):
         return b"t" if v else b"f"
     if isinstance(v, (bytes, bytearray)):
         return b"\\x" + bytes(v).hex().encode()  # collect() yields bytearray
-    if isinstance(v, datetime):
-        return v.isoformat(sep=" ").encode()
-    if isinstance(v, date):
-        return v.isoformat().encode()
-    if isinstance(v, (list, dict, Row)):
-        import json
-
-        return json.dumps(jsonable(v), default=str).encode()
-    return str(v).encode()
+    return render_text(v)
 
 
 _PG_EPOCH_DATE = date(2000, 1, 1)
@@ -227,8 +215,7 @@ def _session_chatter(sql: str) -> str | None:
 
 
 class _Handler(socketserver.BaseRequestHandler):
-    # self.server is the ThreadingTCPServer; PostgresServer attaches
-    # `catalog` onto it before serving
+    # self.server is the PostgresServer
 
     def handle(self) -> None:  # noqa: C901
         sock = self.request
@@ -240,11 +227,11 @@ class _Handler(socketserver.BaseRequestHandler):
             if not self._startup(sock):
                 return
             while True:
-                hdr = self._recv_exact(sock, 5)
+                hdr = recv_exact(sock, 5)
                 if hdr is None:
                     return
                 tag, length = hdr[0:1], struct.unpack(">I", hdr[1:5])[0]
-                payload = self._recv_exact(sock, length - 4) or b""
+                payload = recv_exact(sock, length - 4) or b""
                 if tag == b"X":  # Terminate
                     return
                 if self._skip_to_sync and tag != b"S":
@@ -274,22 +261,13 @@ class _Handler(socketserver.BaseRequestHandler):
 
     # -- protocol pieces ---------------------------------------------------
 
-    def _recv_exact(self, sock, n: int) -> bytes | None:
-        data = b""
-        while len(data) < n:
-            chunk = sock.recv(n - len(data))
-            if not chunk:
-                return None
-            data += chunk
-        return data
-
     def _startup(self, sock) -> bool:
         while True:
-            head = self._recv_exact(sock, 8)
+            head = recv_exact(sock, 8)
             if head is None:
                 return False
             length, code = struct.unpack(">II", head)
-            rest = self._recv_exact(sock, length - 8) or b""
+            rest = recv_exact(sock, length - 8) or b""
             if code == _SSL_REQUEST:
                 sock.sendall(b"N")  # no TLS
                 continue
@@ -363,7 +341,7 @@ class _Handler(socketserver.BaseRequestHandler):
                 fields = df.schema.fields
                 rows = df.collect()
             except Exception as exc:  # noqa: BLE001 — surface as pg error
-                self._error(sock, str(exc).split("\n", 1)[0][:500] or type(exc).__name__)
+                self._error(sock, error_text(exc, 500))
                 sock.sendall(_msg(b"Z", b"I"))
                 return
             sock.sendall(_msg(b"T", self._row_desc(fields)))
@@ -493,7 +471,7 @@ class _Handler(socketserver.BaseRequestHandler):
                 if p["rows"] is None:
                     self._run_portal(p)
             except Exception as exc:  # noqa: BLE001
-                self._ext_error(sock, str(exc).split("\n", 1)[0][:500] or type(exc).__name__)
+                self._ext_error(sock, error_text(exc, 500))
                 return
             if p["fields"]:
                 sock.sendall(_msg(b"T", self._row_desc(p["fields"], p.get("rfmts"))))
@@ -513,7 +491,7 @@ class _Handler(socketserver.BaseRequestHandler):
             if p["rows"] is None:
                 self._run_portal(p)
         except Exception as exc:  # noqa: BLE001
-            self._ext_error(sock, str(exc).split("\n", 1)[0][:500] or type(exc).__name__)
+            self._ext_error(sock, error_text(exc, 500))
             return
         if "noop_tag" in p:
             sock.sendall(_msg(b"C", _cstr(p["noop_tag"])))
@@ -551,25 +529,8 @@ class _Handler(socketserver.BaseRequestHandler):
         sock.sendall(_msg(b"E", payload))
 
 
-class PostgresServer:
+class PostgresServer(WireServer):
     """Threaded pg-wire endpoint over a Catalog."""
 
     def __init__(self, catalog: Catalog, host: str = "127.0.0.1", port: int = 0) -> None:
-        self.catalog = catalog
-        socketserver.ThreadingTCPServer.allow_reuse_address = True
-        self._server = socketserver.ThreadingTCPServer((host, port), _Handler)
-        self._server.daemon_threads = True
-        self._server.catalog = catalog  # type: ignore[attr-defined]
-        self._thread: threading.Thread | None = None
-
-    @property
-    def port(self) -> int:
-        return self._server.server_address[1]
-
-    def start(self) -> None:
-        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-        self._thread.start()
-
-    def stop(self) -> None:
-        self._server.shutdown()
-        self._server.server_close()
+        super().__init__(catalog, host, port, _Handler)

@@ -141,11 +141,6 @@ def table_layout(
     return files, log_files
 
 
-def table_files(root: str, as_of_instant: str | None = None) -> list[str]:
-    """Read-optimized file set (base parquet only) — CoW's only view."""
-    return table_layout(root, as_of_instant)[0]
-
-
 def to_dataframe(spark: SparkSession, ts: TableSource) -> DataFrame:
     from roapi_spark.sources import LoadError
 

@@ -172,9 +172,9 @@ def _exact_bucket_col(col) -> "F.Column":
 # so it should track ARRIVAL VOLUME and state size, not cluster width —
 # exactly like N_EXACT_BUCKETS above. 8 is sized for fixture arrival
 # rates; production deployments with high-volume frontiers raise it via
-# the env knob (it only bounds the stateful stage's parallelism — scans
-# and foreachBatch aggregations are planned per batch with AQE and keep
-# the session-wide setting).
+# the env knob. It bounds more than the stateful stage: foreachBatch
+# aggregations are planned per batch while stream_state_partitions pins
+# the value, so they run at this partition count too (AQE may coalesce).
 STREAM_STATE_PARTITIONS = int(
     os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
 )

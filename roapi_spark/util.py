@@ -36,23 +36,6 @@ def hash_bucket_sql(expr: str, n: int) -> str:
     return f"('0x' || SUBSTR(MD5({expr}), 1, 8))::BIGINT % {n}"
 
 
-def jsonable(v: object) -> object:
-    """Collapse DataFrame.collect() value shapes (Row, bytearray, nested
-    containers) to plain JSON values — shared by the wire servers so
-    complex columns render as JSON text, never Python reprs."""
-    from pyspark.sql import Row
-
-    if isinstance(v, Row):
-        return {k: jsonable(x) for k, x in v.asDict().items()}
-    if isinstance(v, dict):
-        return {k: jsonable(x) for k, x in v.items()}
-    if isinstance(v, (list, tuple)):
-        return [jsonable(x) for x in v]
-    if isinstance(v, (bytes, bytearray)):
-        return bytes(v).hex()
-    return v
-
-
 # Whitespace class usable VERBATIM in both Java regex (Spark) and RE2
 # (DuckDB): Java's \s is [ \t\n\x0B\f\r] but RE2's \s OMITS \x0B, so a
 # literal '\s+' in paired expressions silently diverges on any text
@@ -84,12 +67,10 @@ def serve_persist(df: "DataFrame") -> "DataFrame":  # noqa: F821
 
     * ``bench.py`` unpersists all persistent RDDs between queries
       (``drop_persistent_blocks``);
-    * ``tools/check_correctness.py`` uses one serve per fresh plan;
-    * the HTTP/PG/Flight servers serve each request from a fresh plan
-      and rely on LRU eviction of MEMORY_AND_DISK blocks — a deployment
-      holding many distinct plans hot should periodically call
-      ``spark.sparkContext._jsc.sc().getPersistentRDDs()`` cleanup the
-      same way bench.py does.
+    * ``tools/check_correctness.py`` uses one serve per fresh plan.
+
+    Only these two serve registry builders. The HTTP/PG/Flight servers
+    never call one, so ``serve_persist`` never runs inside a server.
 
     Use this wrapper (not bare ``.persist()``) for serve-scoped persists
     so the contract is greppable in one place.

@@ -8,7 +8,7 @@ import os
 import time
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from roapi_spark.catalog import (
@@ -919,6 +919,8 @@ _SPANS = st.one_of(
         lambda b: f"/*{b}*/",
         st.text(alphabet="ab ;?'\"`\\-*\n", max_size=6).filter(lambda b: "*/" not in b),
     ),
+    # Spark nests /* */ comments
+    st.builds(lambda a, b: f"/*{a}/*{b}*/{a}*/", st.sampled_from(["", " ;", "'"]), _CODE),
 )
 
 
@@ -933,6 +935,7 @@ def _expected_mask(span: str) -> str:
 
 @settings(max_examples=300, deadline=None)
 @given(st.lists(st.tuples(_CODE, _SPANS), max_size=5), _CODE)
+@example(pieces=[("SELECT ", "/* a /* b */ ; */")], tail=" 2")
 def test_mask_literals_blanks_exactly_the_spans(pieces, tail):
     """Same length; code outside every span unchanged; a span keeps its
     quotes and loses its contents (a comment goes whole)."""

@@ -182,6 +182,29 @@ def test_basic_auth_handshake(spark, tmp_path_factory):
         server.shutdown()
 
 
+def test_basic_auth_non_ascii_password(spark, tmp_path_factory):
+    # the HTTP front's credential check (test_auth_unicode_password_and_challenge
+    # in test_server_e2e.py): a non-ASCII password logs in, a wrong one is
+    # refused as unauthenticated rather than failing the call
+    root = tmp_path_factory.mktemp("flight_basic_utf8")
+    (root / "t.csv").write_text("a\n1\n")
+    cat = Catalog(spark)
+    cat.load_table(parse_table_config({"name": "t", "uri": str(root / "t.csv")}))
+    server = SparkFlightServer(cat, basic_auth={"alice": "pä§s"})
+    try:
+        client = flight.connect(f"grpc://127.0.0.1:{server.port}")
+        with pytest.raises(flight.FlightUnauthenticatedError):
+            client.authenticate_basic_token("alice", "pÄ§s")
+        pair = client.authenticate_basic_token("alice", "pä§s")
+        assert pair[1].startswith(b"Bearer ")
+        opts = flight.FlightCallOptions(headers=[pair])
+        desc = flight.FlightDescriptor.for_command(b"SELECT count(*) AS n FROM t")
+        info = client.get_flight_info(desc, opts)
+        tbl = client.do_get(info.endpoints[0].ticket, opts).read_all()
+        assert tbl.column("n").to_pylist() == [1]
+    finally:
+        server.shutdown()
+
 def test_flightsql_doput_parameter_binding(served):
     """ADBC/JDBC-style parameterized execution (flight_sql.rs:781-796):
     prepare with ? placeholders, bind an Arrow parameter batch via

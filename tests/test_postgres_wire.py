@@ -587,6 +587,10 @@ def test_simple_query_splits_outside_literals(pg):
     # an escaped quote does not end a literal, so no rewrite fires in it
     msgs = c.query("SELECT 'it\\'s' AS a, 'information_schema.tables' AS s")
     assert parse_data_rows(msgs) == [("it's", "information_schema.tables")]
+    # Spark nests /* */ comments: the ';' inside is not a statement end
+    msgs = c.query("SELECT /* a /* b */ ; */ 2")
+    assert parse_data_rows(msgs) == [("2",)]
+    assert b"E" not in _tags(msgs)
     c.close()
 
 

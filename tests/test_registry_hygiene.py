@@ -237,3 +237,49 @@ def test_one_sql_text_scanner():
                 if pat.search(line):
                     bad.append(f"{os.path.relpath(p, REPO)}:{i}: {line.strip()}")
     assert not bad, "SQL-text scanning outside mask_literals:\n" + "\n".join(bad)
+
+
+def test_one_home_per_frontend_decision():
+    """REST and GraphQL plan through one filter-op table, HTTP and Flight
+    check credentials in one function, and the pg and mysql servers
+    share one listener and one exact-read loop. Nothing changes the
+    stdlib ThreadingTCPServer for the whole process."""
+    import ast
+
+    pkg = os.path.join(REPO, "roapi_spark")
+    sources = {}
+    for dirpath, _dirs, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                with open(path) as fh:
+                    sources[os.path.relpath(path, pkg)] = fh.read()
+
+    op_tables = [
+        rel for rel, src in sources.items()
+        if rel.startswith("query" + os.sep)
+        for _ in re.finditer(r"""["']lteq["']\s*:""", src)
+    ]
+    assert op_tables == [os.path.join("query", "__init__.py")], op_tables
+
+    digest_users = sorted(
+        (rel, fn.name)
+        for rel, src in sources.items()
+        for fn in ast.walk(ast.parse(src))
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and "compare_digest" in ast.unparse(fn)
+    )
+    assert digest_users == [(os.path.join("server", "auth.py"), "credential_scheme")], digest_users
+
+    reuse = [
+        rel for rel, src in sources.items()
+        if re.search(r"ThreadingTCPServer\.allow_reuse_address\s*=", src)
+    ]
+    assert not reuse, reuse
+
+    recv_loops = [
+        rel for rel, src in sources.items()
+        if rel.startswith("server" + os.sep)
+        for _ in re.finditer(r"^\s*def _?recv_exact\(", src, re.M)
+    ]
+    assert recv_loops == [os.path.join("server", "wire.py")], recv_loops
