@@ -22,6 +22,7 @@ from __future__ import annotations
 import hashlib
 import os
 import re
+import shutil
 import threading
 import time
 
@@ -114,6 +115,25 @@ def sub_outside_literals(pattern: re.Pattern, repl, sql: str) -> str:
     return "".join(out) + sql[last:]
 
 
+def _link_or_copy(src: str, dst: str) -> None:
+    """Stage one file of a directory: a hard link where the filesystem
+    allows it, else a copy."""
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copy2(src, dst)
+
+
+def _remove_staged(path: str) -> None:
+    if os.path.isdir(path):
+        shutil.rmtree(path, ignore_errors=True)
+    else:
+        try:
+            os.unlink(path)
+        except OSError:
+            pass
+
+
 class CatalogError(RuntimeError):
     pass
 
@@ -152,20 +172,22 @@ class Catalog:
     # -- tables ------------------------------------------------------------
 
     def _stage_source(self, ts: TableSource) -> TableSource:
-        """Snapshot isolation for refreshable single-file sources: copy
-        the file to an immutable staging path and load THAT. Loading a
-        live path is inherently racy — schema inference, the pin's
-        materialization, and the scan each open the file at different
-        times, and Spark truncates reads at the listed size, so a writer
-        rewriting the file mid-load yields torn rows (caught by
-        test_concurrent_refresh_rebind_soak). Writers using atomic
-        rename make the copy a consistent point-in-time snapshot. Two
-        staged generations are kept (matching the pin rotation) so
-        recomputes of the previous generation still find their file."""
-        if ts.reload_interval is None or not os.path.isfile(ts.uri):
+        """Snapshot isolation for refreshable local sources: copy the
+        file, or the directory as a hard-linked tree, to an immutable
+        staging path and load THAT. Loading a live path is inherently
+        racy — schema inference, the pin's materialization, and the scan
+        each open the file at different times, and Spark truncates reads
+        at the listed size, so a writer rewriting the file mid-load
+        yields torn rows (caught by test_concurrent_refresh_rebind_soak).
+        Writers using atomic rename make the copy a consistent
+        point-in-time snapshot. Each generation's own path also gives it
+        its own plan, so ``_bind``'s persist pins it rather than finding
+        the previous generation's cache. Two staged generations are kept
+        (matching the pin rotation) so recomputes of the previous
+        generation still find their files."""
+        if ts.reload_interval is None or not os.path.exists(ts.uri):
             return ts
         import dataclasses
-        import shutil
         import uuid as _uuid
 
         from roapi_spark.functions.snapshot import cache_root
@@ -174,29 +196,25 @@ class Catalog:
         os.makedirs(stage_dir, exist_ok=True)
         if ts.name not in self._staged:
             # first stage of this table in THIS process: sweep copies a
-            # previous process left behind (rotation only unlinks files
+            # previous process left behind (rotation only removes copies
             # it tracked, so orphans would otherwise accumulate forever
             # in the persistent cache dir across restarts)
             for leftover in os.listdir(stage_dir):
-                try:
-                    os.unlink(os.path.join(stage_dir, leftover))
-                except OSError:
-                    pass
+                _remove_staged(os.path.join(stage_dir, leftover))
         # keep the FULL suffix chain: '.warc.gz'/'.cdx.gz' readers key
         # gzip handling on the double suffix, and splitext's bare '.gz'
         # would defeat format sniffing on the staged copy
-        base = os.path.basename(ts.uri)
+        base = os.path.basename(ts.uri.rstrip(os.sep))
         ext = base[base.index(".") :] if "." in base else ""
         staged = os.path.join(stage_dir, f"{_uuid.uuid4().hex}{ext}")
-        shutil.copy2(ts.uri, staged)
+        if os.path.isdir(ts.uri):
+            shutil.copytree(ts.uri, staged, copy_function=_link_or_copy)
+        else:
+            shutil.copy2(ts.uri, staged)
         gens = self._staged.setdefault(ts.name, [])
         gens.append(staged)
         if len(gens) > 2:
-            old = gens.pop(0)
-            try:
-                os.unlink(old)
-            except OSError:
-                pass
+            _remove_staged(gens.pop(0))
         return dataclasses.replace(ts, uri=staged)
 
     def _bind(self, ts: TableSource, df: DataFrame) -> DataFrame:
@@ -290,10 +308,7 @@ class Catalog:
             for df in self._pinned.pop(name, []):
                 df.unpersist(blocking=False)
             for staged in self._staged.pop(name, []):
-                try:
-                    os.unlink(staged)
-                except OSError:
-                    pass
+                _remove_staged(staged)
 
     def table(self, name: str) -> DataFrame:
         if name not in self.sources:
@@ -319,27 +334,23 @@ class Catalog:
     # else that parses to a Command node (CREATE/DROP/SET/CACHE/ALTER/
     # ANALYZE/...) mutates session or filesystem state.
     _READONLY_COMMAND_PREFIXES = ("Explain", "Show", "Describe")
+    # Plans that write although they are not Command nodes: INSERT
+    # parses to InsertIntoStatement / InsertIntoDir, and EXECUTE
+    # IMMEDIATE runs a statement held in a string or a session variable,
+    # which no walk of the outer plan can see.
+    _WRITING_PLAN_PREFIXES = ("Insert", "UnresolvedExecuteImmediate")
 
-    def _assert_read_only_sql(self, sql: str, args: list | dict | None = None) -> None:
-        """Reject non-query SQL before execution in read-only mode.
+    def _assert_read_only_plan(self, plan, sql: str) -> None:
+        """Reject a parsed statement that is not a query, in read-only
+        mode, before anything runs.
 
         The reference's read-only gate only covers register/drop
         (roapi/src/api/routes.rs:29-37) because DataFusion's SQL surface is
         read-only by construction; Spark SQL can write (INSERT OVERWRITE
         DIRECTORY, CTAS LOCATION, DROP VIEW...), so the contract has to be
         enforced at the parser.  ``spark.sql`` executes commands eagerly —
-        the check must run on the *parsed* plan, before execution.  With
-        ``args`` it parses the way ``spark.sql`` binds them: a marker may
-        stand where a plain parse rejects it (``INSERT OVERWRITE
-        DIRECTORY :p``, ``LOCATION ?``), so such a parse failure must
-        not let the statement through.
+        the check must run on the *parsed* plan, before execution.
         """
-        try:
-            plan = self._parse_plan(sql, args)
-        except Exception:
-            if args:
-                raise
-            return  # let spark.sql raise its own (nicer) parse error
         jvm = self.spark.sparkContext._jvm
         cmd_cls = jvm.java.lang.Class.forName(
             "org.apache.spark.sql.catalyst.plans.logical.Command"
@@ -356,8 +367,7 @@ class Catalog:
                     raise ReadOnlyError(
                         f"read-only mode rejects {name}: {sql[:80]}"
                     )
-            elif name.startswith("Insert"):  # InsertIntoStatement / IntoDir
-                # writes parse to plain logical plans, not Command nodes
+            elif name.startswith(self._WRITING_PLAN_PREFIXES):
                 raise ReadOnlyError(
                     f"read-only mode rejects {name}: {sql[:80]}"
                 )
@@ -445,13 +455,16 @@ class Catalog:
             )
         return ts.uri
 
-    def _dml_summary(self, operation: str, table: str, version: int) -> DataFrame:
-        # mark the bound view stale; the next read re-binds it
-        self._stale_dml_views.add(table)
+    def _summary(self, operation: str, table: str, version: int) -> DataFrame:
         return self.spark.createDataFrame(
             [(operation, table, version)],
             "operation string, table string, version bigint",
         )
+
+    def _dml_summary(self, operation: str, table: str, version: int) -> DataFrame:
+        # mark the bound view stale; the next read re-binds it
+        self._stale_dml_views.add(table)
+        return self._summary(operation, table, version)
 
     def _flush_stale_views(self) -> None:
         """Re-bind every view our own DML invalidated (lazy counterpart
@@ -489,10 +502,7 @@ class Catalog:
         r"^\s*DESCRIBE\s+HISTORY\s+" + _IDENT + r"\s*;?\s*$", re.I
     )
 
-    def _route_history(self, sql: str) -> DataFrame | None:
-        m = self._HISTORY_RE.match(sql)
-        if m is None:
-            return None
+    def _route_history(self, m: re.Match) -> DataFrame:
         import json as _json
 
         from roapi_spark.sources.delta import _log_versions
@@ -514,14 +524,7 @@ class Catalog:
                         )
                         ts = ci.get("timestamp")
                         break
-            rows.append(
-                (
-                    v,
-                    None if ts is None else int(ts),
-                    op,
-                    params,
-                )
-            )
+            rows.append((v, None if ts is None else int(ts), op, params))
         rows.sort(reverse=True)  # newest first, like delta-spark
         return self.spark.createDataFrame(
             rows,
@@ -537,10 +540,7 @@ class Catalog:
         r"^\s*DESCRIBE\s+DETAIL\s+" + _IDENT + r"\s*;?\s*$", re.I
     )
 
-    def _route_detail(self, sql: str) -> DataFrame | None:
-        m = self._DETAIL_RE.match(sql)
-        if m is None:
-            return None
+    def _route_detail(self, m: re.Match) -> DataFrame:
         from roapi_spark.sources.delta import snapshot_active_adds
 
         name = self._unquote_ident(m.group(1))
@@ -576,10 +576,7 @@ class Catalog:
         re.I,
     )
 
-    def _route_restore(self, sql: str) -> DataFrame | None:
-        m = self._RESTORE_RE.match(sql)
-        if m is None:
-            return None
+    def _route_restore(self, m: re.Match) -> DataFrame:
         from roapi_spark.sinks.delta import restore_delta, version_at_timestamp
 
         name = self._unquote_ident(m.group(1))
@@ -609,26 +606,15 @@ class Catalog:
         r"^\s*SHOW\s+TBLPROPERTIES\s+" + _IDENT + r"\s*;?\s*$", re.I
     )
 
-    def _route_show_tblproperties(self, sql: str) -> DataFrame | None:
-        m = self._SHOW_PROPS_RE.match(sql)
-        if m is None:
-            return None
+    def _route_show_tblproperties(self, m: re.Match) -> DataFrame:
         from roapi_spark.sources.delta import snapshot_state
 
         path = self._delta_path(m.group(1), stmt="SHOW TBLPROPERTIES")
         _, meta = snapshot_state(path)
         conf = (meta or {}).get("configuration") or {}
-        rows = sorted(conf.items()) or []
-        return self.spark.createDataFrame(
-            rows, "key string, value string"
-        ) if rows else self.spark.createDataFrame(
-            [], "key string, value string"
-        )
+        return self.spark.createDataFrame(sorted(conf.items()), "key string, value string")
 
-    def _route_tblproperties(self, sql: str) -> DataFrame | None:
-        m = self._TBLPROPS_RE.match(sql)
-        if m is None:
-            return None
+    def _route_tblproperties(self, m: re.Match) -> DataFrame:
         from roapi_spark.sinks.delta import set_table_properties
 
         name = self._unquote_ident(m.group(1))
@@ -659,65 +645,41 @@ class Catalog:
         re.I,
     )
 
-    def _route_ctas(self, sql: str) -> DataFrame | None:
-        m = self._CTAS_RE.match(sql)
-        if m is not None:
-            from roapi_spark.config import parse_table_config
-            from roapi_spark.sinks.delta import write_delta
+    def _route_ctas(self, m: re.Match) -> DataFrame:
+        from roapi_spark.config import parse_table_config
+        from roapi_spark.sinks.delta import write_delta
 
-            replace = m.group(1) is not None
-            name = self._unquote_ident(m.group(2))
-            location, select = m.group(3), m.group(4)
-            if name in self.sources and not replace:
-                raise CatalogError(
-                    f"table already registered: {name} "
-                    "(use CREATE OR REPLACE TABLE)"
-                )
-            if not replace and os.path.isdir(
-                os.path.join(location, "_delta_log")
-            ):
-                raise CatalogError(
-                    f"a delta table already exists at {location} "
-                    "(use CREATE OR REPLACE TABLE)"
-                )
-            df = self.query_sql(select)  # full read surface incl. rewrites
-            v = write_delta(df, location, mode="overwrite")
-            self.load_table(
-                parse_table_config(
-                    {"name": name, "uri": location, "option": {"format": "delta"}}
-                )
+        replace = m.group(1) is not None
+        name = self._unquote_ident(m.group(2))
+        location, select = m.group(3), m.group(4)
+        if name in self.sources and not replace:
+            raise CatalogError(
+                f"table already registered: {name} "
+                "(use CREATE OR REPLACE TABLE)"
             )
-            return self.spark.createDataFrame(
-                [("CREATE TABLE", name, v)],
-                "operation string, table string, version bigint",
+        if not replace and os.path.isdir(os.path.join(location, "_delta_log")):
+            raise CatalogError(
+                f"a delta table already exists at {location} "
+                "(use CREATE OR REPLACE TABLE)"
             )
-        m = self._DROP_RE.match(sql)
-        if m is not None:
-            name = self._unquote_ident(m.group(2))
-            # group(1) is the captured IF EXISTS clause itself — a
-            # substring test missed 'IF\nEXISTS'/double-space spellings
-            if name not in self.sources and m.group(1) is not None:
-                return self.spark.createDataFrame(
-                    [("DROP TABLE", name, -1)],
-                    "operation string, table string, version bigint",
-                )
+        df = self.query_sql(select)  # full read surface incl. rewrites
+        v = write_delta(df, location, mode="overwrite")
+        self.load_table(
+            parse_table_config(
+                {"name": name, "uri": location, "option": {"format": "delta"}}
+            )
+        )
+        return self._summary("CREATE TABLE", name, v)
+
+    def _route_drop(self, m: re.Match) -> DataFrame:
+        name = self._unquote_ident(m.group(2))
+        # group(1) is the captured IF EXISTS clause itself — a substring
+        # test missed 'IF\nEXISTS'/double-space spellings
+        if name in self.sources or m.group(1) is None:
             self.drop_table(name)
-            return self.spark.createDataFrame(
-                [("DROP TABLE", name, -1)],
-                "operation string, table string, version bigint",
-            )
-        return None
+        return self._summary("DROP TABLE", name, -1)
 
-    def _route_maintenance(self, sql: str) -> DataFrame | None:
-        m = self._MAINT_RE.match(sql)
-        if m is None:
-            routed = self._route_tblproperties(sql)
-            if routed is not None:
-                return routed
-            routed = self._route_ctas(sql)
-            if routed is not None:
-                return routed
-            return self._route_restore(sql)
+    def _route_optimize_vacuum(self, m: re.Match) -> DataFrame:
         verb, name, rest = (
             m.group(1).upper(),
             self._unquote_ident(m.group(2)),
@@ -771,6 +733,21 @@ class Catalog:
             "operation string, table string, files_deleted bigint",
         )
 
+    # The delta-grammar statements, in match order: (pattern, handler,
+    # writes). Spark's parser rejects or misreads all of them on v1
+    # relations, so they route by shape before any parse; a write route
+    # on a read-only catalog is refused before its handler runs.
+    _ROUTES = (
+        (_HISTORY_RE, _route_history, False),
+        (_DETAIL_RE, _route_detail, False),
+        (_SHOW_PROPS_RE, _route_show_tblproperties, False),
+        (_MAINT_RE, _route_optimize_vacuum, True),
+        (_TBLPROPS_RE, _route_tblproperties, True),
+        (_CTAS_RE, _route_ctas, True),
+        (_DROP_RE, _route_drop, True),
+        (_RESTORE_RE, _route_restore, True),
+    )
+
     def _parse_plan(self, sql: str, args: list | dict | None = None):
         """Spark's parsed plan of ``sql``; ``args`` bind to literals the
         way ``spark.sql(sql, args=args)`` binds them."""
@@ -794,19 +771,15 @@ class Catalog:
             )
         return parser.parsePlanWithParameters(sql, ctx)
 
-    def _route_dml(self, sql: str, args: list | dict | None = None) -> DataFrame | None:
-        """Returns a 1-row summary DF for DELETE/UPDATE/MERGE statements
-        on delta tables, or None when ``sql`` is not DML."""
+    def _route_dml(self, plan) -> DataFrame | None:
+        """Returns a 1-row summary DF for DELETE/UPDATE/MERGE/INSERT
+        statements on delta tables, or None when ``plan`` is not DML."""
         from roapi_spark.sinks.delta import (
             delete_delta,
             merge_delta,
             update_delta,
         )
 
-        try:
-            plan = self._parse_plan(sql, args)
-        except Exception:
-            return None  # let spark.sql raise its own parse error
         kind = plan.getClass().getSimpleName()
         if kind == "DeleteFromTable":
             name, _ = self._relation_name(plan.table())
@@ -1088,8 +1061,9 @@ class Catalog:
                 )
             import dataclasses
 
+            # a delta version never changes: no staged copy needed
             pinned = dataclasses.replace(ts, name=view, option=opt)
-            _load(self.spark, self._stage_source(pinned)).createOrReplaceTempView(view)
+            _load(self.spark, pinned).createOrReplaceTempView(view)
             out.append(sql[last:start])
             out.append(view)
             last = m.end()
@@ -1145,25 +1119,31 @@ class Catalog:
     def query_sql(self, sql: str, args: list | dict | None = None) -> DataFrame:
         """``args`` bind ``?`` markers (a list) or ``:name`` markers (a
         dict) through Spark's native parameterized SQL: a value is never
-        pasted into the SQL text, so no quoting or injection concerns."""
-        meta_df = self._route_history(sql)  # read-only-safe: log metadata
-        if meta_df is None:
-            meta_df = self._route_detail(sql)
-        if meta_df is None:
-            meta_df = self._route_show_tblproperties(sql)
-        if meta_df is not None:
-            return meta_df
-        if self.read_only:
-            if self._MAINT_RE.match(sql) or self._RESTORE_RE.match(sql):
-                raise ReadOnlyError(
-                    f"read-only mode rejects table maintenance: {sql[:80]}"
-                )
-            self._assert_read_only_sql(sql, args)
-        else:
-            routed = self._route_maintenance(sql)
-            if routed is None:
-                routed = self._route_dml(sql, args)
-            if routed is not None:
+        pasted into the SQL text, so no quoting or injection concerns.
+
+        The one statement gate: a delta-grammar statement takes its
+        route from ``_ROUTES``; any other is parsed once, with ``args``
+        bound the way ``spark.sql`` binds them, and that plan is judged
+        by the read-only check or dispatched as DML. A marker may stand
+        where a plain parse rejects it (``INSERT OVERWRITE DIRECTORY
+        :p``), so a parse failure with ``args`` raises; without them,
+        ``spark.sql`` raises its own (nicer) parse error."""
+        for pattern, handler, writes in self._ROUTES:
+            if m := pattern.match(sql):
+                if writes and self.read_only:
+                    verb = sql.split(None, 1)[0].upper()
+                    raise ReadOnlyError(f"read-only mode rejects {verb}: {sql[:80]}")
+                return handler(self, m)
+        try:
+            plan = self._parse_plan(sql, args)
+        except Exception:
+            if args:
+                raise
+            plan = None
+        if plan is not None:
+            if self.read_only:
+                self._assert_read_only_plan(plan, sql)
+            elif (routed := self._route_dml(plan)) is not None:
                 return routed
         if self._stale_dml_views:
             self._flush_stale_views()

@@ -12,15 +12,14 @@ encoded as literal-without-indexing fields (always valid, no encoder
 state). Flow control is honored by draining WINDOW_UPDATEs before
 sending DATA beyond the peer's window.
 
-Routing is delegated to ``ApiServer.handle`` — both protocol fronts
-share one implementation of the API surface.
+The response is decided by ``server.http.respond`` — both protocol
+fronts share it, and this module only frames what it returns.
 """
 
 from __future__ import annotations
 
 import struct
 import threading
-from urllib.parse import parse_qsl, unquote, urlparse
 
 PREFACE_REST = b"\r\nSM\r\n\r\n"  # after the "PRI * HTTP/2.0\r\n" request line
 
@@ -401,50 +400,22 @@ class H2CConnection:
     # -- request dispatch ---------------------------------------------------
 
     def _dispatch(self, sid: int) -> None:
-        from roapi_spark.server.http import ApiError
+        from roapi_spark.server.http import respond
 
         st = self.streams.pop(sid, None)
         if st is None or "headers" not in st:
             return
         h = dict(st["headers"])
-        method = h.get(":method", "GET")
-        parsed = urlparse(h.get(":path", "/"))
-        query = dict(parse_qsl(parsed.query, keep_blank_values=True))
-        if method == "OPTIONS":  # CORS preflight (http/mod.rs:61-66)
-            block = encode_response_headers(
-                204,
-                [
-                    ("access-control-allow-origin", "*"),
-                    ("access-control-allow-methods", "GET, POST, OPTIONS"),
-                    ("access-control-allow-headers", "*"),
-                ],
-            )
-            self._send_frame(_HEADERS, _FLAG_END_HEADERS | _FLAG_END_STREAM, sid, block)
-            return
-        # HEAD routes as GET with the body suppressed below (axum parity)
-        route_method = "GET" if method == "HEAD" else method
-        try:
-            authorize = getattr(self.api, "authorize", None)
-            if authorize is not None and not authorize(
-                h.get("authorization"), parsed.path
-            ):
-                raise ApiError(401, "unauthorized", "invalid credentials")
-            code, ctype, payload = self.api.handle(
-                route_method, unquote(parsed.path), query, st["body"], h.get("accept")
-            )
-        except ApiError as err:
-            code, ctype, payload = err.code, "application/json", err.body()
-        resp_headers = [
-            ("content-type", ctype),
-            ("content-length", str(len(payload))),
-            ("access-control-allow-origin", "*"),
-        ]
-        if code == 401:
-            challenge = getattr(self.api, "auth_challenge", None)
-            if challenge is not None:
-                resp_headers.extend((k.lower(), v) for k, v in challenge())
-        block = encode_response_headers(code, resp_headers)
-        if method == "HEAD" or not payload:
+        code, headers, payload = respond(
+            self.api,
+            h.get(":method", "GET"),
+            h.get(":path", "/"),
+            st["body"],
+            h.get("authorization"),
+            h.get("accept"),
+        )
+        block = encode_response_headers(code, headers)
+        if not payload:
             self._send_frame(
                 _HEADERS, _FLAG_END_HEADERS | _FLAG_END_STREAM, sid, block
             )

@@ -197,39 +197,6 @@ loadSchema();renderHist();
 </script></body></html>"""
 
 
-class _PrependReader:
-    """File-like that replays already-consumed bytes before the real
-    stream (used to hand the request line back to the HTTP/1.1 parser
-    after h2c-preface sniffing)."""
-
-    def __init__(self, head: bytes, rfile) -> None:
-        self._head = head
-        self._rfile = rfile
-
-    def _take(self, n: int) -> bytes:
-        chunk = self._head[:n]
-        self._head = self._head[len(chunk):]
-        return chunk
-
-    def read(self, n: int = -1) -> bytes:
-        if self._head:
-            if n is None or n < 0:
-                return self._take(len(self._head)) + self._rfile.read(n)
-            return self._take(n)
-        return self._rfile.read(n)
-
-    def readline(self, limit: int = -1) -> bytes:
-        if self._head:
-            nl = self._head.find(b"\n")
-            if nl >= 0:
-                return self._take(nl + 1)
-            return self._take(len(self._head)) + self._rfile.readline(limit)
-        return self._rfile.readline(limit)
-
-    def __getattr__(self, name):
-        return getattr(self._rfile, name)
-
-
 class ApiError(Exception):
     def __init__(self, code: int, error: str, message: str) -> None:
         super().__init__(message)
@@ -241,6 +208,47 @@ class ApiError(Exception):
         return json.dumps(
             {"code": self.code, "error": self.error, "message": self.message}
         ).encode()
+
+
+def respond(
+    api, method: str, target: str, body: bytes, authorization: str | None, accept: str | None
+) -> tuple[int, list[tuple[str, str]], bytes]:
+    """The one HTTP response decision, shared by the HTTP/1.1 and h2c
+    transports, which only frame what it returns: (status, headers,
+    payload). ``target`` is the request target as sent; the path stays
+    percent-encoded, and ``ApiServer.handle`` decodes each captured
+    segment once. ``api.handle`` is looked up per request, and an api
+    without ``authorize`` is served open."""
+    if method == "OPTIONS":
+        # CORS preflight (reference: tower-http CorsLayer with
+        # GET/POST/OPTIONS + any origin, http/mod.rs:61-66)
+        return 204, [
+            ("Access-Control-Allow-Origin", "*"),
+            ("Access-Control-Allow-Methods", "GET, POST, OPTIONS"),
+            ("Access-Control-Allow-Headers", "*"),
+            ("Content-Length", "0"),
+        ], b""
+    parsed = urlparse(target)
+    query = dict(parse_qsl(parsed.query, keep_blank_values=True))
+    authorize = getattr(api, "authorize", None)
+    try:
+        if authorize is not None and not authorize(authorization, parsed.path):
+            raise ApiError(401, "unauthorized", "invalid credentials")
+        # HEAD serves the GET route with the body suppressed, matching
+        # axum's automatic HEAD handling for GET routes
+        code, ctype, payload = api.handle(
+            "GET" if method == "HEAD" else method, parsed.path, query, body, accept
+        )
+    except ApiError as err:
+        code, ctype, payload = err.code, "application/json", err.body()
+    headers = [
+        ("Content-Type", ctype),
+        ("Content-Length", str(len(payload))),
+        ("Access-Control-Allow-Origin", "*"),  # CORS layer
+    ]
+    if code == 401 and hasattr(api, "auth_challenge"):
+        headers += api.auth_challenge()
+    return code, headers, b"" if method == "HEAD" else payload
 
 
 class ApiServer:
@@ -532,60 +540,34 @@ class ApiServer:
                     # instead of a handler traceback
                     self.close_connection = True
 
-            def handle_one_request(self) -> None:
+            def parse_request(self) -> bool:
                 # h2c prior-knowledge on the same port (api_test.rs:247-277):
-                # the HTTP/2 preface starts with a pseudo-request-line;
-                # sniff it before the HTTP/1.1 parser consumes state
-                first = self.rfile.readline(65537)
-                if first.startswith(b"PRI * HTTP/2.0"):
-                    from roapi_spark.server.h2c import PREFACE_REST, H2CConnection
+                # the HTTP/2 preface opens with a pseudo request line, which
+                # the stdlib hands here right after reading it
+                if not self.raw_requestline.startswith(b"PRI * HTTP/2.0"):
+                    return super().parse_request()
+                from roapi_spark.server.h2c import PREFACE_REST, H2CConnection
 
-                    rest = self.rfile.read(len(PREFACE_REST))
-                    if rest == PREFACE_REST:
-                        H2CConnection(server, self.rfile, self.wfile).run()
-                    self.close_connection = True
-                    return
-                self.rfile = _PrependReader(first, self.rfile)
-                super().handle_one_request()
+                if self.rfile.read(len(PREFACE_REST)) == PREFACE_REST:
+                    H2CConnection(server, self.rfile, self.wfile).run()
+                self.close_connection = True
+                return False
 
             def _respond(self) -> None:
-                parsed = urlparse(self.path)
-                query = dict(parse_qsl(parsed.query, keep_blank_values=True))
                 length = int(self.headers.get("Content-Length") or 0)
-                body = self.rfile.read(length) if length else b""
-                if self.command == "OPTIONS":
-                    # CORS preflight (reference: tower-http CorsLayer with
-                    # GET/POST/OPTIONS + any origin, http/mod.rs:61-66)
-                    self.send_response(204)
-                    self.send_header("Access-Control-Allow-Origin", "*")
-                    self.send_header("Access-Control-Allow-Methods", "GET, POST, OPTIONS")
-                    self.send_header("Access-Control-Allow-Headers", "*")
-                    self.send_header("Content-Length", "0")
-                    self.end_headers()
-                    return
-                # HEAD serves the GET route with the body suppressed,
-                # matching axum's automatic HEAD handling for GET routes
-                method = "GET" if self.command == "HEAD" else self.command
-                try:
-                    if not server.authorize(
-                        self.headers.get("Authorization"), parsed.path
-                    ):
-                        raise ApiError(401, "unauthorized", "invalid credentials")
-                    code, ctype, payload = server.handle(
-                        method, parsed.path, query, body, self.headers.get("Accept")
-                    )
-                except ApiError as err:
-                    code, ctype, payload = err.code, "application/json", err.body()
+                code, headers, payload = respond(
+                    server,
+                    self.command,
+                    self.path,
+                    self.rfile.read(length) if length else b"",
+                    self.headers.get("Authorization"),
+                    self.headers.get("Accept"),
+                )
                 self.send_response(code)
-                self.send_header("Content-Type", ctype)
-                self.send_header("Content-Length", str(len(payload)))
-                self.send_header("Access-Control-Allow-Origin", "*")  # CORS layer
-                if code == 401:
-                    for hk, hv in server.auth_challenge():
-                        self.send_header(hk, hv)
+                for name, value in headers:
+                    self.send_header(name, value)
                 self.end_headers()
-                if self.command != "HEAD":
-                    self.wfile.write(payload)
+                self.wfile.write(payload)
 
             do_GET = do_POST = do_HEAD = do_OPTIONS = _respond
 

@@ -81,6 +81,9 @@ def test_read_only_sql_surface(spark, csv_file, tmp_path):
         "ALTER TABLE t ADD COLUMNS (z INT)",
         "TRUNCATE TABLE t",
         "ANALYZE TABLE t COMPUTE STATISTICS",
+        # the statement EXECUTE IMMEDIATE runs is a string no plan walk sees
+        f"EXECUTE IMMEDIATE 'INSERT OVERWRITE DIRECTORY ''{out}'' USING parquet "
+        "SELECT * FROM t'",
     ]:
         with pytest.raises(ReadOnlyError):
             cat.query_sql(stmt)
@@ -872,6 +875,39 @@ def test_stage_source_keeps_full_suffix(spark, tmp_path):
     )
     staged = cat._stage_source(ts)
     assert staged.uri.endswith(".warc.gz"), staged.uri
+
+
+def test_directory_refresh_pins_each_generation(spark, tmp_path, monkeypatch):
+    """A refreshable directory table is staged per generation like a
+    file: each refresh serves the republished rows, and the bound view
+    stays persisted rather than sharing (and then losing) the previous
+    generation's cache."""
+    import shutil
+
+    from pyspark import StorageLevel
+
+    monkeypatch.setenv("SPARK_GRAFT_CACHE_DIR", str(tmp_path / "cache"))
+    live = tmp_path / "events"
+
+    def publish(n: int) -> None:
+        staging = tmp_path / "events.next"
+        spark.range(n).write.mode("overwrite").parquet(str(staging))
+        if live.exists():
+            shutil.rmtree(live)
+        staging.rename(live)
+
+    publish(10)
+    cat = Catalog(spark)
+    cat.load_table(parse_table_config(
+        {"name": "ev", "uri": str(live), "format": "parquet", "reload_interval": 3600}
+    ))
+    assert cat.query_sql("SELECT count(*) AS n FROM ev").collect()[0].n == 10
+    for n in (20, 30, 40):
+        publish(n)
+        cat.refresh_table("ev")
+        assert cat.query_sql("SELECT count(*) AS n FROM ev").collect()[0].n == n
+        assert cat.table("ev").storageLevel != StorageLevel.NONE
+    cat.drop_table("ev")
 
 
 def test_rewrites_honor_backslash_escapes(spark, csv_file):

@@ -178,6 +178,47 @@ def test_cors_preflight_both_protocols(h2_url):
         assert out == b"204 GET, POST, OPTIONS", (proto, out)
 
 
+@needs_curl
+def test_http1_and_h2c_answer_alike(spark, tmp_path_factory):
+    """Both transports hand the request target to one responder, and each
+    captured path segment is decoded once: an encoded slash or percent
+    sign in a KV key, and a REST table request, get the same status and
+    body over HTTP/1.1 and h2c."""
+    from roapi_spark.catalog import Catalog
+    from roapi_spark.config import parse_kv_config, parse_table_config
+    from roapi_spark.server import ApiServer
+
+    root = tmp_path_factory.mktemp("parity")
+    (root / "uk_cities.csv").write_text(CSV)
+    (root / "kv.json").write_text(
+        json.dumps([{"k": "a/b", "v": "slash"}, {"k": "x%20y", "v": "pct"}])
+    )
+    cat = Catalog(spark)
+    cat.load_table(parse_table_config({"name": "uk_cities", "uri": str(root / "uk_cities.csv")}))
+    cat.load_kv(parse_kv_config({"name": "s", "uri": str(root / "kv.json"), "key": "k", "value": "v"}))
+    srv = ApiServer(cat)
+    host, port = srv.start()
+    try:
+        for path, want in [
+            ("/api/kv/s/a%2Fb", b"slash"),
+            ("/api/kv/s/x%2520y", b"pct"),
+            ("/api/tables/uk_cities?filter[city]eq=rugby&columns=city", [{"city": "rugby"}]),
+        ]:
+            seen = [
+                subprocess.run(
+                    ["curl", "-s", "-g", proto, "-w", "%{http_code}", f"http://{host}:{port}{path}"],
+                    capture_output=True, timeout=60, check=True,
+                ).stdout
+                for proto in ("--http1.1", "--http2-prior-knowledge")
+            ]
+            assert seen[0] == seen[1], (path, seen)
+            body, status = seen[0][:-3], seen[0][-3:]
+            assert status == b"200", (path, seen)
+            assert (json.loads(body) if isinstance(want, list) else body) == want, (path, seen)
+    finally:
+        srv.stop()
+
+
 # ---- frame layer: flow-control semantics + malformed-frame handling --------
 
 

@@ -644,6 +644,23 @@ def test_read_only_rejects_parameterized_write(pg, tmp_path):
     c.close()
 
 
+def test_read_only_rejects_execute_immediate_write(pg, tmp_path):
+    """EXECUTE IMMEDIATE runs a statement held in a string, which the
+    read-only check cannot see into: over the wire it is refused and
+    writes nothing."""
+    out = tmp_path / "exfil"
+    c = MiniPgClient(pg.port)
+    msgs = c.query(
+        f"EXECUTE IMMEDIATE 'INSERT OVERWRITE DIRECTORY ''{out}'' USING parquet "
+        "SELECT * FROM pgt'"
+    )
+    err = next(p for t, p in msgs if t == b"E")
+    assert b"read-only" in err
+    assert not out.exists()
+    assert parse_data_rows(c.query("SELECT count(*) FROM pgt")) == [("3",)]
+    c.close()
+
+
 def test_param_in_rewritten_clause_errors(spark, tmp_path):
     """A pg parameter cannot stand in a clause the catalog rewrites from
     the SQL text (time travel, table_changes, RESTORE, VACUUM RETAIN):

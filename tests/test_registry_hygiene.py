@@ -243,7 +243,9 @@ def test_one_home_per_frontend_decision():
     """REST and GraphQL plan through one filter-op table, HTTP and Flight
     check credentials in one function, and the pg and mysql servers
     share one listener and one exact-read loop. Nothing changes the
-    stdlib ThreadingTCPServer for the whole process."""
+    stdlib ThreadingTCPServer for the whole process. HTTP/1.1 and h2c
+    share one responder (one CORS preflight, no replay reader), and the
+    catalog routes statements from one table."""
     import ast
 
     pkg = os.path.join(REPO, "roapi_spark")
@@ -283,3 +285,13 @@ def test_one_home_per_frontend_decision():
         for _ in re.finditer(r"^\s*def _?recv_exact\(", src, re.M)
     ]
     assert recv_loops == [os.path.join("server", "wire.py")], recv_loops
+
+    cors = [
+        rel for rel, src in sources.items()
+        if rel.startswith("server" + os.sep)
+        for _ in re.finditer(r"access-control-allow-methods", src, re.I)
+    ]
+    assert cors == [os.path.join("server", "http.py")], cors
+
+    for gone in ("_PrependReader", "_route_maintenance"):
+        assert not [rel for rel, src in sources.items() if gone in src], gone
