@@ -184,7 +184,17 @@ class Catalog:
         its own plan, so ``_bind``'s persist pins it rather than finding
         the previous generation's cache. Two staged generations are kept
         (matching the pin rotation) so recomputes of the previous
-        generation still find their files."""
+        generation still find their files.
+
+        An http(s) table, refreshable or not, is read from a download
+        made at each load. Downloads are tracked as the same two
+        generations, so a refresh deletes the one of generation n-2."""
+        from roapi_spark.sources.http import fetch_to_local, is_download
+
+        if is_download(ts):
+            ts = fetch_to_local(ts)
+            self._track_staged(ts.name, ts.uri)
+            return ts
         if ts.reload_interval is None or not os.path.exists(ts.uri):
             return ts
         import dataclasses
@@ -211,11 +221,16 @@ class Catalog:
             shutil.copytree(ts.uri, staged, copy_function=_link_or_copy)
         else:
             shutil.copy2(ts.uri, staged)
-        gens = self._staged.setdefault(ts.name, [])
-        gens.append(staged)
+        self._track_staged(ts.name, staged)
+        return dataclasses.replace(ts, uri=staged)
+
+    def _track_staged(self, name: str, path: str) -> None:
+        """Record ``path`` as the newest generation's file of ``name``;
+        generation n-2's file is removed."""
+        gens = self._staged.setdefault(name, [])
+        gens.append(path)
         if len(gens) > 2:
             _remove_staged(gens.pop(0))
-        return dataclasses.replace(ts, uri=staged)
 
     def _bind(self, ts: TableSource, df: DataFrame) -> DataFrame:
         """Bind a loaded DataFrame as ``ts.name``'s view.
@@ -339,6 +354,12 @@ class Catalog:
     # IMMEDIATE runs a statement held in a string or a session variable,
     # which no walk of the outer plan can see.
     _WRITING_PLAN_PREFIXES = ("Insert", "UnresolvedExecuteImmediate")
+    # Functions that call any static Java method their string arguments
+    # name, inside the server JVM, from a plain SELECT. A call must spell
+    # one of these names in the text, so a statement that does not skips
+    # the expression walk (a JVM round trip per expression node).
+    _JVM_CALL_FUNCTIONS = frozenset({"reflect", "java_method", "try_reflect"})
+    _JVM_CALL_RE = re.compile(r"reflect|java_method", re.I)
 
     def _assert_read_only_plan(self, plan, sql: str) -> None:
         """Reject a parsed statement that is not a query, in read-only
@@ -371,11 +392,26 @@ class Catalog:
                 raise ReadOnlyError(
                     f"read-only mode rejects {name}: {sql[:80]}"
                 )
-            for seq in (node.children(), node.innerChildren()):
-                it = seq.iterator()
-                while it.hasNext():
-                    walk(it.next())
+            if names_jvm_call:
+                each(node.expressions(), walk_expr)
+            each(node.children(), walk)
+            each(node.innerChildren(), walk)
 
+        # subquery plans are reached through innerChildren above, lambda
+        # bodies and function arguments through children here
+        def walk_expr(expr) -> None:
+            if expr.getClass().getSimpleName() == "UnresolvedFunction":
+                fn = expr.nameParts().last().lower()
+                if fn in self._JVM_CALL_FUNCTIONS:
+                    raise ReadOnlyError(f"read-only mode rejects {fn}(): {sql[:80]}")
+            each(expr.children(), walk_expr)
+
+        def each(seq, visit) -> None:
+            it = seq.iterator()
+            while it.hasNext():
+                visit(it.next())
+
+        names_jvm_call = self._JVM_CALL_RE.search(sql) is not None
         walk(plan)
 
     # information_schema surface (DataFusion exposes it natively —

@@ -8,11 +8,12 @@ MIME contract (encoding/mod.rs:14-45): json <- ``*/*``/``application/json``
 ``application/[vnd.apache.]parquet``; an unknown ACCEPT silently falls back
 to the configured default.
 
-Scale note: every encoder consumes Arrow batches via ``df.toArrow()`` —
-the driver-side materialization point every API response needs anyway; for
-big exports use ``encode_batches_iter`` which streams
-``toLocalIterator``-style per-partition batches without holding the full
-result.
+Scale note: the HTTP server and the CLI encode with ``encode_dataframe``:
+one ``df.toArrow()`` collects the whole result on the driver, then one
+encoder call renders it, so a response's driver memory grows with its
+row count. ``encode_batches_iter`` streams ``toLocalIterator``-style
+per-partition chunks without holding the full result, but no server
+route uses it yet.
 """
 
 from __future__ import annotations

@@ -67,14 +67,10 @@ def load_table(spark: SparkSession, ts: TableSource) -> DataFrame:
     """Load a table source into a (lazy where possible) DataFrame."""
     import importlib
 
-    uri = ts.uri
-    if ts.format == "google_spreadsheet" or "docs.google.com/spreadsheets" in uri:
-        # the sheets loader speaks the REST API itself — the generic
-        # http fetch-to-local path must not download the document URL
-        pass
-    elif uri.startswith(("http://", "https://")):
-        from roapi_spark.sources.http import fetch_to_local
+    from roapi_spark.sources.http import fetch_to_local, is_download
 
+    uri = ts.uri
+    if is_download(ts):
         ts = fetch_to_local(ts)
     elif uri == "stdin" or uri == "-":
         from roapi_spark.sources.stdin import stdin_to_local

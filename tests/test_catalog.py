@@ -98,6 +98,36 @@ def test_read_only_sql_surface(spark, csv_file, tmp_path):
 
 
 
+_GET_PROP = "'java.lang.System', 'getProperty', 'java.version'"
+
+
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        f"SELECT reflect({_GET_PROP}) AS v",
+        f"SELECT JAVA_METHOD({_GET_PROP}) AS v FROM t",
+        f"SELECT Try_Reflect({_GET_PROP}) AS v",
+        f"WITH x AS (SELECT java_method({_GET_PROP}) AS v) SELECT * FROM x",
+        f"SELECT * FROM t WHERE name IN (SELECT reflect({_GET_PROP}))",
+        f"SELECT (SELECT max(reflect({_GET_PROP})) FROM t) AS v",
+        f"SELECT transform(array(1), x -> reflect({_GET_PROP})) AS v",
+    ],
+)
+def test_read_only_rejects_jvm_calls(spark, csv_file, stmt):
+    """reflect, java_method and try_reflect run any static Java method
+    their arguments name inside the server JVM: a read-only catalog
+    refuses them wherever they sit in the statement, in any case."""
+    cat = Catalog(spark, read_only=True)
+    cat.load_table(parse_table_config({"name": "t", "uri": str(csv_file)}))
+    with pytest.raises(ReadOnlyError, match="reflect|java_method"):
+        cat.query_sql(stmt)
+    # the names inside a string or as a column alias are no call
+    row = cat.query_sql("SELECT 'reflect(' AS java_method, count(*) AS n FROM t").collect()[0]
+    assert (row.java_method, row.n) == ("reflect(", 2)
+    rw = Catalog(spark, read_only=False)
+    assert rw.query_sql(f"SELECT reflect({_GET_PROP}) AS v").collect()[0].v
+
+
 @pytest.mark.parametrize(
     "stmt,args",
     [
@@ -210,6 +240,38 @@ def test_refresh_table_read_only_gate(spark, csv_file, monkeypatch):
     rw.load_table(ts)
     rw.refresh_table("t", dynamic=True)
     assert len(loads) == 4
+
+
+def test_http_table_refresh_keeps_two_downloads(spark, tmp_path, monkeypatch):
+    """Each load of an http table downloads the file; a refresh deletes
+    the download of generation n-2, and the table answers from the
+    newest one. Dropping the table deletes the rest."""
+    import functools
+    import http.server
+    import tempfile
+    import threading
+
+    served, temp = tmp_path / "served", tmp_path / "temp"
+    served.mkdir()
+    temp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(temp))
+    handler = functools.partial(http.server.SimpleHTTPRequestHandler, directory=str(served))
+    httpd = http.server.ThreadingHTTPServer(("127.0.0.1", 0), handler)
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
+    try:
+        (served / "t.csv").write_text("id\n1\n")
+        cat = Catalog(spark, read_only=False)
+        uri = f"http://127.0.0.1:{httpd.server_address[1]}/t.csv"
+        cat.load_table(parse_table_config({"name": "ht", "uri": uri}))
+        for n in range(2, 5):
+            (served / "t.csv").write_text("id\n" + "".join(f"{i}\n" for i in range(n)))
+            cat.refresh_table("ht")
+            assert len(list(temp.glob("roapi_http_*"))) <= 2
+            assert cat.query_sql("SELECT count(*) AS n FROM ht").collect()[0].n == n
+        cat.drop_table("ht")
+        assert not list(temp.glob("roapi_http_*"))
+    finally:
+        httpd.shutdown()
 
 
 def test_catalog_from_config(spark, csv_file):

@@ -5,10 +5,14 @@ fraction; ms-resolution values render 3 fractional digits; us -> 6."""
 from __future__ import annotations
 
 import json
-from datetime import date, datetime
+import math
+from datetime import date, datetime, time
+from decimal import Decimal
 
 import pyarrow as pa
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from roapi_spark.encoders import encode_arrow_table, format_from_accept
 from roapi_spark.encoders.json import rows_to_json_bytes
@@ -314,3 +318,206 @@ def test_avro_uint32_roundtrip(spark, tmp_path):
     df = load_table(spark, parse_table_config({"name": "u", "uri": str(p)}))
     got = sorted((r["n"] for r in df.collect()), key=lambda v: (v is None, v))
     assert got == [1, 2**31 + 7, None]
+
+
+# ---- byte identity of the column-wise JSON renderer --------------------
+#
+# The oracle is the row-wise encoder the column-wise one replaced:
+# ``to_pylist`` rows, NaN/Inf cleaned to null, ``json.dumps`` with an
+# Arrow-ISO ``default``. Every table must encode to the same bytes.
+
+
+def _ref_frac(us):
+    if us == 0:
+        return ""
+    if us % 1000 == 0:
+        return f".{us // 1000:03d}"
+    return f".{us:06d}"
+
+
+def _ref_default(v):
+    if isinstance(v, datetime):
+        return (
+            f"{v.year:04d}-{v.month:02d}-{v.day:02d}T"
+            f"{v.hour:02d}:{v.minute:02d}:{v.second:02d}{_ref_frac(v.microsecond)}"
+        )
+    if isinstance(v, date):
+        return v.isoformat()
+    if isinstance(v, time):
+        return f"{v.hour:02d}:{v.minute:02d}:{v.second:02d}{_ref_frac(v.microsecond)}"
+    if isinstance(v, (bytes, bytearray)):
+        return v.hex()
+    if isinstance(v, Decimal):
+        return float(v)
+    raise TypeError(f"not JSON serializable: {type(v)}")
+
+
+def _ref_clean(v):
+    if isinstance(v, float) and (math.isnan(v) or math.isinf(v)):
+        return None
+    if isinstance(v, dict):
+        return {k: _ref_clean(x) for k, x in v.items()}
+    if isinstance(v, list):
+        return [_ref_clean(x) for x in v]
+    return v
+
+
+def _ref_json(table):
+    rows = [_ref_clean(r) for r in table.to_pylist()]
+    return json.dumps(rows, default=_ref_default, separators=(",", ":")).encode()
+
+
+def _ref_ndjson(table):
+    rows = [_ref_clean(r) for r in table.to_pylist()]
+    return b"".join(
+        json.dumps(r, default=_ref_default, separators=(",", ":")).encode() + b"\n"
+        for r in rows
+    )
+
+
+def _assert_same_bytes(table):
+    from roapi_spark.encoders.json import rows_to_ndjson_bytes
+
+    assert rows_to_json_bytes(table) == _ref_json(table)
+    assert rows_to_ndjson_bytes(table) == _ref_ndjson(table)
+    assert encode_arrow_table(table, "json") == _ref_json(table)
+
+
+_FLOAT_EDGES = [
+    float("nan"), float("inf"), float("-inf"), 0.0, -0.0, 5e-324, -5e-324,
+    2.2250738585072014e-308, 1e-4, 0.00009999999999999999, 1e10, 9999999999.999998,
+    1e15, 999999999999999.9, 1e16, 1.5, -2.0, 0.1, 123456.789,
+]
+_SPECIAL_CHARS = ['"', "\\", "\x00", "\x1f", "\n", "\t", "\x7f", "é", " ", "\U0001f600"]
+
+
+def _value_strategies():
+    plain_text = st.text(
+        st.characters(min_codepoint=0x20, max_codepoint=0x7E, exclude_characters='"\\'),
+        max_size=8,
+    )
+    # mostly one special character in otherwise plain text, so that a
+    # column often holds a single reason to leave the kernel path
+    any_text = st.one_of(
+        plain_text,
+        st.builds(lambda a, c, b: a + c + b, plain_text, st.sampled_from(_SPECIAL_CHARS), plain_text),
+        st.text(st.characters(max_codepoint=0x7F), max_size=8),
+    )
+    kernel_floats = st.floats(1e-4, 1e10, exclude_max=True) | st.floats(-1e10, -1e-4, exclude_min=True)
+    floats = st.one_of(kernel_floats, st.sampled_from(_FLOAT_EDGES), st.floats())
+    frac = st.sampled_from([0, 1_000, 999_000, 2, 123_456, 999_999])
+
+    def stamps(lo, hi):
+        return st.builds(
+            lambda d, us: d.replace(microsecond=us),
+            st.datetimes(datetime(lo, 1, 1), datetime(hi, 12, 31)),
+            frac,
+        )
+
+    struct_t = pa.struct([("a", pa.int64()), ("b", pa.string())])
+    return [
+        (pa.int64(), st.integers(-(2**63), 2**63 - 1)),
+        (pa.int8(), st.integers(-128, 127)),
+        (pa.uint64(), st.integers(0, 2**64 - 1)),
+        (pa.bool_(), st.booleans()),
+        (pa.string(), plain_text),
+        (pa.string(), any_text),
+        (pa.float64(), floats),
+        (pa.float32(), st.floats(width=32)),
+        (pa.timestamp("us"), stamps(1, 9999)),
+        (pa.timestamp("us", tz="UTC"), stamps(1900, 2100)),
+        (pa.timestamp("us", tz="America/New_York"), stamps(1970, 2100)),
+        (pa.timestamp("us", tz="Asia/Kolkata"), stamps(1970, 2100)),
+        (pa.timestamp("us", tz="+05:30"), stamps(1970, 2100)),
+        (pa.timestamp("ms"), stamps(1, 9999).map(lambda d: d.replace(microsecond=d.microsecond // 1000 * 1000))),
+        (pa.date32(), st.dates()),
+        (pa.binary(), st.binary(max_size=6)),
+        (pa.decimal128(12, 3), st.decimals(-(10**8), 10**8, places=3, allow_nan=False, allow_infinity=False)),
+        (pa.list_(pa.float64()), st.lists(st.none() | floats, max_size=3)),
+        (struct_t, st.fixed_dictionaries({"a": st.none() | st.integers(-5, 5), "b": st.none() | any_text})),
+        (pa.map_(pa.string(), pa.float64()), st.lists(st.tuples(plain_text, floats), max_size=2)),
+        (pa.null(), st.none()),
+    ]
+
+
+def _chunked(arr, cuts):
+    """``arr`` as a ChunkedArray split at the given cut points."""
+    bounds = [0, *sorted({c % (len(arr) + 1) for c in cuts}), len(arr)]
+    return pa.chunked_array([arr.slice(a, b - a) for a, b in zip(bounds, bounds[1:])], arr.type)
+
+
+def _tables():
+    kinds = _value_strategies()
+
+    @st.composite
+    def table(draw):
+        n = draw(st.integers(0, 8))
+        names, cols = [], []
+        for _ in range(draw(st.integers(0, 5))):
+            typ, values = draw(st.sampled_from(kinds))
+            vals = draw(st.lists(st.none() | values, min_size=n + 2, max_size=n + 2))
+            arr = pa.array(vals, typ).slice(1, n)  # a sliced array: offset 1
+            cols.append(_chunked(arr, draw(st.lists(st.integers(0, 8), max_size=3))))
+            names.append(draw(st.sampled_from(["a", "b", "c", "é", 'q"'])))
+        t = pa.table(cols, names=names) if cols else pa.table({}).slice(0, 0)
+        if cols and n and draw(st.booleans()):
+            lo = draw(st.integers(0, n))
+            t = t.slice(lo, draw(st.integers(0, n - lo)))
+        return t
+
+    return table()
+
+
+@settings(max_examples=300, deadline=None)
+@given(_tables())
+def test_column_wise_json_is_byte_identical(table):
+    _assert_same_bytes(table)
+
+
+def test_column_wise_json_edge_values():
+    """One column per kernel and per fallback, with the edges each one
+    decides on: the float exponent bounds, escape characters, zero, ms
+    and µs fractions before and after 1970, empty and zero-column
+    tables, multi-chunk and sliced columns, a repeated column name."""
+    stamps = [
+        datetime(2021, 4, 12, 4, 4, 28), datetime(2021, 5, 12, 4, 4, 28, 1000),
+        datetime(2021, 5, 12, 4, 4, 28, 2), None, datetime(1969, 12, 31, 23, 59, 59, 500000),
+        datetime(1, 1, 1), datetime(9999, 12, 31, 23, 59, 59, 999999),
+    ]
+    n = len(stamps)
+    floats = (_FLOAT_EDGES * 2)[:n]
+    table = pa.table({
+        "i": pa.array([1, -2, None, 4, 5, 6, 2**63 - 1], pa.int64()),
+        "b": [True, False, None, True, True, False, True],
+        "s": ["a", "b c", None, "", "x~", "{}", "q"],
+        "s_esc": ["é", 'a"b', "\\", "\x00", "\x7f", None, "ok"],
+        "f_kernel": [1.0, -0.0, None, 0.5, 1e-4, 9999999999.999998, 0.1],
+        "f_edges": floats,
+        "f32": pa.array([1.1, 2.5, None, 3.0, 0.1, 7, 8], pa.float32()),
+        "ts": pa.array(stamps, pa.timestamp("us")),
+        "ts_whole": pa.array([datetime(2020, 1, d) for d in range(1, n + 1)], pa.timestamp("us")),
+        "ts_tz": pa.array(stamps[:4] + [None] * 3, pa.timestamp("us", tz="America/New_York")),
+        "ts_ms": pa.array(stamps, pa.timestamp("ms")),
+        "d": pa.array([date(2020, 1, 1)] * (n - 1) + [None], pa.date32()),
+        "nul": pa.array([None] * n, pa.null()),
+        "bin": [b"\x0a\xff"] * n,
+        "dec": pa.array([Decimal("1.50")] * n, pa.decimal128(5, 2)),
+        "arr": [[1.0, float("nan")]] * n,
+        "st": [{"a": 1, "b": "x"}] * n,
+        "m": pa.array([[("k", float("nan"))]] * n, pa.map_(pa.string(), pa.float64())),
+        "t64": pa.array([time(1, 2, 3, 4000)] * n, pa.time64("us")),
+    })
+    _assert_same_bytes(table)
+    # one reason to leave the kernel path per column
+    _assert_same_bytes(pa.table({f"f{i}": [e, 1.5, None] for i, e in enumerate(_FLOAT_EDGES)}))
+    _assert_same_bytes(pa.table({f"s{i}": [f"a{c}", "b", None] for i, c in enumerate(_SPECIAL_CHARS)}))
+    _assert_same_bytes(table.slice(2, 3))
+    _assert_same_bytes(table.slice(0, 0))
+    _assert_same_bytes(table.select([]))
+    _assert_same_bytes(pa.concat_tables([table, table.slice(1, 4), table]))
+    uneven = pa.table({"i": pa.chunked_array([table["i"].combine_chunks()]),
+                       "s": _chunked(table["s"].combine_chunks(), [2, 5])})
+    _assert_same_bytes(uneven)
+    dup = pa.table([pa.array([1, 2]), pa.array(["a", "b"]), pa.array([3, 4])], names=["a", "b", "a"])
+    _assert_same_bytes(dup)
+    assert rows_to_json_bytes(dup) == b'[{"a":3,"b":"a"},{"a":4,"b":"b"}]'

@@ -661,6 +661,18 @@ def test_read_only_rejects_execute_immediate_write(pg, tmp_path):
     c.close()
 
 
+def test_read_only_rejects_reflect_over_the_wire(pg):
+    """A read-only server refuses reflect(), which would run a Java
+    static method in the server JVM, and the session goes on."""
+    c = MiniPgClient(pg.port)
+    msgs = c.query("SELECT reflect('java.lang.System', 'getProperty', 'java.version')")
+    err = next(p for t, p in msgs if t == b"E")
+    assert b"read-only" in err and b"reflect" in err
+    assert not parse_data_rows(msgs)
+    assert parse_data_rows(c.query("SELECT count(*) FROM pgt")) == [("3",)]
+    c.close()
+
+
 def test_param_in_rewritten_clause_errors(spark, tmp_path):
     """A pg parameter cannot stand in a clause the catalog rewrites from
     the SQL text (time travel, table_changes, RESTORE, VACUUM RETAIN):

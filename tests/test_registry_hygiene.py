@@ -295,3 +295,29 @@ def test_one_home_per_frontend_decision():
 
     for gone in ("_PrependReader", "_route_maintenance"):
         assert not [rel for rel, src in sources.items() if gone in src], gone
+
+
+def test_json_encoder_renders_per_column():
+    """``encoders/json.py`` builds rows with Arrow kernels: ``to_pylist``
+    appears only in the per-value fallback, on one column, never on a
+    table or a batch, so a per-row Python path cannot come back
+    unnoticed."""
+    import ast
+
+    with open(os.path.join(REPO, "roapi_spark", "encoders", "json.py")) as f:
+        tree = ast.parse(f.read())
+
+    def pylist_calls(node):
+        return sorted(
+            ast.unparse(n.func.value)
+            for n in ast.walk(node)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr in ("to_pylist", "to_pydict")
+        )
+
+    fallback = next(
+        n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef) and n.name == "_python_text"
+    )
+    assert pylist_calls(tree) == pylist_calls(fallback)
+    assert set(pylist_calls(fallback)) == {"col"}, pylist_calls(fallback)
