@@ -32,6 +32,7 @@ from roapi_spark.config import AppConfig, KeyValueSource, TableSource
 from roapi_spark.query.graphql import graphql_to_df
 from roapi_spark.query.rest import rest_query_to_df
 from roapi_spark.sources import load_table as _load
+from roapi_spark.sources.http import fetch_to_local, is_download
 
 
 # Where Spark SQL text is not code: quoted spans and comments. Strings
@@ -189,8 +190,6 @@ class Catalog:
         An http(s) table, refreshable or not, is read from a download
         made at each load. Downloads are tracked as the same two
         generations, so a refresh deletes the one of generation n-2."""
-        from roapi_spark.sources.http import fetch_to_local, is_download
-
         if is_download(ts):
             ts = fetch_to_local(ts)
             self._track_staged(ts.name, ts.uri)
