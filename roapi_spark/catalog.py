@@ -348,17 +348,19 @@ class Catalog:
     # else that parses to a Command node (CREATE/DROP/SET/CACHE/ALTER/
     # ANALYZE/...) mutates session or filesystem state.
     _READONLY_COMMAND_PREFIXES = ("Explain", "Show", "Describe")
-    # Plans that write although they are not Command nodes: INSERT
-    # parses to InsertIntoStatement / InsertIntoDir, and EXECUTE
+    # Plans that write or run code although they are not Command nodes:
+    # INSERT parses to InsertIntoStatement / InsertIntoDir, EXECUTE
     # IMMEDIATE runs a statement held in a string or a session variable,
-    # which no walk of the outer plan can see.
-    _WRITING_PLAN_PREFIXES = ("Insert", "UnresolvedExecuteImmediate")
+    # which no walk of the outer plan can see, and SELECT TRANSFORM(...)
+    # USING '<command>' starts that command on the server.
+    _WRITING_PLAN_PREFIXES = ("Insert", "UnresolvedExecuteImmediate", "ScriptTransformation")
     # Functions that call any static Java method their string arguments
-    # name, inside the server JVM, from a plain SELECT. A call must spell
-    # one of these names in the text, so a statement that does not skips
-    # the expression walk (a JVM round trip per expression node).
+    # name, inside the server JVM, from a plain SELECT. A call spells one
+    # of these names in the text, or names its function at run time
+    # through IDENTIFIER(<expr>), so a statement that spells none of them
+    # skips the expression walk (a JVM round trip per expression node).
     _JVM_CALL_FUNCTIONS = frozenset({"reflect", "java_method", "try_reflect"})
-    _JVM_CALL_RE = re.compile(r"reflect|java_method", re.I)
+    _JVM_CALL_RE = re.compile(r"reflect|java_method|identifier", re.I)
 
     def _assert_read_only_plan(self, plan, sql: str) -> None:
         """Reject a parsed statement that is not a query, in read-only
@@ -399,10 +401,19 @@ class Catalog:
         # subquery plans are reached through innerChildren above, lambda
         # bodies and function arguments through children here
         def walk_expr(expr) -> None:
-            if expr.getClass().getSimpleName() == "UnresolvedFunction":
+            cls = expr.getClass().getSimpleName()
+            if cls == "UnresolvedFunction":
                 fn = expr.nameParts().last().lower()
                 if fn in self._JVM_CALL_FUNCTIONS:
                     raise ReadOnlyError(f"read-only mode rejects {fn}(): {sql[:80]}")
+            # IDENTIFIER('ref' || 'lect')(...) names its function only
+            # when the analyzer folds the name: refuse any function named
+            # that way that takes arguments (reflect needs two). A column
+            # named by IDENTIFIER has no arguments and passes.
+            elif cls == "ExpressionWithUnresolvedIdentifier" and expr.otherExprs().nonEmpty():
+                raise ReadOnlyError(
+                    f"read-only mode rejects a function named by IDENTIFIER(): {sql[:80]}"
+                )
             each(expr.children(), walk_expr)
 
         def each(seq, visit) -> None:

@@ -33,7 +33,6 @@ import json
 import math
 from datetime import date, datetime, time
 from decimal import Decimal
-from json.encoder import encode_basestring_ascii
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -119,8 +118,6 @@ def _timestamp_text(col):
         pc.cast(pc.cast(secs, pa.timestamp("s")), pa.string()), 10, 11, "T"
     )
     frac = pc.subtract(pc.cast(col, pa.int64()), pc.cast(secs, pa.int64()))
-    if not _any(pc.not_equal(frac, 0)):
-        return pc.binary_join_element_wise('"', text, '"', "")
     us = pc.utf8_lpad(pc.cast(frac, pa.string()), 6, "0")
     us = pc.if_else(pc.ends_with(us, "000"), pc.utf8_slice_codeunits(us, 0, 3), us)
     tail = pc.if_else(pc.equal(frac, 0), '"', pc.binary_join_element_wise(".", us, '"', ""))
@@ -150,17 +147,12 @@ def _kernel_text(col):
     return None
 
 
+_ENCODER = json.JSONEncoder(separators=(",", ":"), default=_default)
+
+
 def _python_text(col) -> pa.Array:
     """Per-value fallback, the contract's reference spelling."""
-    if col.type == pa.string():
-        return pa.array(
-            ["null" if v is None else encode_basestring_ascii(v) for v in col.to_pylist()],
-            pa.string(),
-        )
-    return pa.array(
-        [json.dumps(_clean(v), default=_default, separators=(",", ":")) for v in col.to_pylist()],
-        pa.string(),
-    )
+    return pa.array([_ENCODER.encode(_clean(v)) for v in col.to_pylist()], pa.string())
 
 
 def _value_text(col):
@@ -170,19 +162,20 @@ def _value_text(col):
     return pc.fill_null(text, "null")
 
 
-def _rows(table: pa.Table, end: str) -> bytes:
-    """Every row's object text followed by ``end``, concatenated."""
+def _rows(table: pa.Table, end: str) -> list:
+    """Every row's object text followed by ``end``, as consecutive
+    byte views; joining them gives the rows end to end."""
     names = table.column_names
     last = {name: i for i, name in enumerate(names)}
     if not last:
-        return ("{}" + end).encode() * table.num_rows
+        return [("{}" + end).encode() * table.num_rows]
     parts: list = []
     for k, name in enumerate(last):  # dict order: first position of each name
         key = ("{" if k == 0 else ",") + json.dumps(name) + ":"
         parts += key, _value_text(table.column(last[name]))
     rows = pc.binary_join_element_wise(*parts, "}" + end, "")
     chunks = rows.chunks if isinstance(rows, pa.ChunkedArray) else [rows]
-    return b"".join(_string_data(c) for c in chunks if len(c))
+    return [_string_data(c) for c in chunks if len(c)]
 
 
 def _string_data(arr: pa.StringArray) -> memoryview:
@@ -193,12 +186,14 @@ def _string_data(arr: pa.StringArray) -> memoryview:
 
 
 def rows_to_json_bytes(table: pa.Table) -> bytes:
-    body = _rows(table, ",")
-    return b"[" + body[:-1] + b"]"
+    views = _rows(table, ",")
+    if views:  # the last row's trailing comma
+        views[-1] = views[-1][:-1]
+    return b"".join([b"[", *views, b"]"])
 
 
 def rows_to_ndjson_bytes(table: pa.Table) -> bytes:
     """Newline-delimited JSON (application/x-ndjson): one object per
     line, same value rendering as the array encoder — the streaming-
     friendly shape log shippers and `jq`-pipelines consume."""
-    return _rows(table, "\n")
+    return b"".join(_rows(table, "\n"))

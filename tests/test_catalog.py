@@ -131,6 +131,44 @@ def test_read_only_rejects_jvm_calls(spark, csv_file, stmt):
 @pytest.mark.parametrize(
     "stmt,args",
     [
+        (f"SELECT IDENTIFIER('ref' || 'lect')({_GET_PROP}) AS v", None),
+        (f"SELECT identifier('java_' || 'method')({_GET_PROP}) AS v FROM t", None),
+        (f"SELECT IDENTIFIER(:f)({_GET_PROP}) AS v", {"f": "reflect"}),
+        (f"SELECT IDENTIFIER(?)({_GET_PROP}) AS v", ["try_reflect"]),
+        (f"SELECT * FROM t WHERE name IN (SELECT IDENTIFIER(:f)({_GET_PROP}))", {"f": "reflect"}),
+    ],
+)
+def test_read_only_rejects_functions_named_by_identifier(spark, csv_file, stmt, args):
+    """IDENTIFIER(<expr>) names a function only when the analyzer folds
+    <expr>, so the text need not spell reflect: a read-only catalog
+    refuses every function called by an IDENTIFIER name."""
+    cat = Catalog(spark, read_only=True)
+    cat.load_table(parse_table_config({"name": "t", "uri": str(csv_file)}))
+    with pytest.raises(ReadOnlyError, match="IDENTIFIER"):
+        cat.query_sql(stmt, args)
+    # a column or a table named by IDENTIFIER is no call
+    rows = cat.query_sql("SELECT IDENTIFIER(:c) AS n FROM IDENTIFIER('t')", {"c": "name"})
+    assert sorted(r.n for r in rows.collect()) == ["a", "b"]
+
+
+def test_read_only_rejects_script_transform(spark, csv_file, tmp_path):
+    """SELECT TRANSFORM(...) USING '<command>' starts that command on the
+    server: a read-only catalog refuses it before anything runs."""
+    marker = tmp_path / "ran"
+    cat = Catalog(spark, read_only=True)
+    cat.load_table(parse_table_config({"name": "t", "uri": str(csv_file)}))
+    for stmt in (
+        f"SELECT TRANSFORM(name) USING 'touch {marker}' AS (x) FROM t",
+        f"WITH s AS (SELECT TRANSFORM(name) USING 'touch {marker}' AS (x) FROM t) SELECT * FROM s",
+    ):
+        with pytest.raises(ReadOnlyError, match="ScriptTransformation"):
+            cat.query_sql(stmt)
+    assert not marker.exists()
+
+
+@pytest.mark.parametrize(
+    "stmt,args",
+    [
         ("INSERT OVERWRITE DIRECTORY ? USING parquet SELECT * FROM t", ["{out}"]),
         ("INSERT OVERWRITE DIRECTORY :p1 USING parquet SELECT * FROM t", {"p1": "{out}"}),
         ("CREATE TABLE evil USING parquet LOCATION ? AS SELECT * FROM t", ["{out}"]),
